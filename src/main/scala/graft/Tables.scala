@@ -4,41 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loaders for the driver-generated test data (TESTDATA.md).
   * At 100 TB these would be date-partitioned directories / a catalog
-  * table; the read call is the only thing that changes.
+  * table; the read call is the only thing that changes. Every read goes
+  * through [[graft.sources.SchemaCatalog]], so the footer schema is
+  * inferred once per file version, not once per query.
   */
 object Tables {
-
-  /** Schema catalog: parquet footer schema per table path, inferred
-    * once per JVM from the file itself and replayed into every later
-    * read via `.schema(...)` — the role a production catalog
-    * (metastore / Iceberg manifest) plays. Without it EVERY DataFrame
-    * construction pays a driver-side footer-inference pass plus its
-    * 1-task schema job (~0.05–0.1 s), once per table per query — pure
-    * metadata overhead across a 200-query suite. Data is still read
-    * from parquet on every invocation; only the schema (metadata,
-    * deterministic per fixture file) is reused. Keyed by full path, so
-    * fixtures can never serve each other's schemas; `events.ts`'s
-    * conf-dependent encoding is safe because every events read funnels
-    * through [[events]], which pins `nanosAsLong` before first touch.
-    *
-    * ASSUMPTION (r21 ADVICE): fixture files are immutable for the JVM's
-    * lifetime — the cache has no invalidation and is shared across
-    * SparkSessions, so a parquet regenerated IN PLACE mid-JVM would be
-    * read with the stale schema. That holds for every caller here (the
-    * driver writes fixtures before launching, specs create fresh temp
-    * paths); a long-lived service over mutable tables would key this on
-    * (path, mtime, length) or use a real catalog instead.
-    */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // every query path passes through here — make sure the native
     // planner surface (top-k strategy + window-topk rewrite) is live
     graft.plans.GraftPlanner.ensure(spark)
-    val path = s"$dir/$name.parquet"
-    val sch = schemas.computeIfAbsent(path, _ => spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
+    graft.sources.FileSources.parquet(spark, s"$dir/$name.parquet")
   }
 
   /** `events.ts` has shipped in different encodings across driver

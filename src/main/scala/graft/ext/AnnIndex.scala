@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.functions.{AnnExprs, VectorOps}
+import graft.sources.SchemaCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,14 +148,13 @@ object AnnIndex {
     // without rewriting the signature table (a bucket crossing the cap
     // only AFTER an append must still drop — a pre-capped store could
     // never resurrect the rows it already threw away)
-    base.select(col("neighbor_id"),
+    SchemaCatalog.write(base.select(col("neighbor_id"),
       posexplode(AnnExprs.lshBuckets(col("cv"), planes)).as(Seq("t", "b")))
-      .hint("rebalance") // size-targeted files, not one per upstream task
-      .write.mode("overwrite").parquet(s"$path/sigs/batch=$tok")
-    base.hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/vectors/batch=$tok")
+      .hint("rebalance"), // size-targeted files, not one per upstream task
+      s"$path/sigs", s"batch=$tok")
+    SchemaCatalog.write(base.hint("rebalance"), s"$path/vectors", s"batch=$tok")
     writeLshHot(spark, path, Seq(tok), maxBucket, tok)
-    val stored = spark.read.parquet(s"$path/vectors/batch=$tok").count()
+    val stored = readBatches(spark, s"$path/vectors", Seq(tok)).count()
     val meta = LshMeta(tables, bits, dim, seed, maxBucket, nn, stored)
     // rawRows tracks the rows actually INGESTED (pre-filter), not the
     // shape-sizing `n` the caller may have pinned to a larger target
@@ -176,11 +176,10 @@ object AnnIndex {
     */
   private def writeLshHot(spark: SparkSession, path: String,
       sigBatches: Seq[String], maxBucket: Int, tok: String): Unit =
-    readBatches(spark, s"$path/sigs", sigBatches)
+    SchemaCatalog.write(readBatches(spark, s"$path/sigs", sigBatches)
       .groupBy("t", "b").agg(count(lit(1)).as("_bn"))
       .filter(col("_bn") > maxBucket)
-      .select("t", "b")
-      .write.mode("overwrite").parquet(s"$path/hot/$tok")
+      .select("t", "b"), s"$path/hot/$tok")
 
   /** `rawRows` is the PRE-FILTER corpus row count (zero-norm rows
     * included), maintained across appends: the in-flight
@@ -233,14 +232,13 @@ object AnnIndex {
       .filter(VectorOps.norm(col("cv")) > 0)
     // mode overwrite: a torn previous attempt at this epoch left
     // uncommitted leftovers in exactly these dirs — replace, never mix
-    base.select(col("neighbor_id"),
+    SchemaCatalog.write(base.select(col("neighbor_id"),
       posexplode(AnnExprs.lshBuckets(col("cv"), planes)).as(Seq("t", "b")))
-      .hint("rebalance") // size-targeted files, not one per upstream task
-      .write.mode("overwrite").parquet(s"$path/sigs/batch=$tok")
-    base.hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/vectors/batch=$tok")
+      .hint("rebalance"), // size-targeted files, not one per upstream task
+      s"$path/sigs", s"batch=$tok")
+    SchemaCatalog.write(base.hint("rebalance"), s"$path/vectors", s"batch=$tok")
     writeLshHot(spark, path, man.batches :+ tok, meta.maxBucket, tok)
-    val added = spark.read.parquet(s"$path/vectors/batch=$tok").count()
+    val added = readBatches(spark, s"$path/vectors", Seq(tok)).count()
     val addedRaw = batch.count()
     val updated = meta.copy(rows = meta.rows + added)
     commit(spark, path,
@@ -266,14 +264,13 @@ object AnnIndex {
     val meta = lshMetaOf(man)
     if (man.batches.size <= 1) return meta
     val tok = tokenOf(man.epoch + 1)
-    readBatches(spark, s"$path/sigs", man.batches)
+    SchemaCatalog.write(readBatches(spark, s"$path/sigs", man.batches)
       .select("neighbor_id", "t", "b")
-      .hint("rebalance") // AQE sizes the compacted generation by bytes
-      .write.mode("overwrite").parquet(s"$path/sigs/batch=$tok")
-    readBatches(spark, s"$path/vectors", man.batches)
+      .hint("rebalance"), // AQE sizes the compacted generation by bytes
+      s"$path/sigs", s"batch=$tok")
+    SchemaCatalog.write(readBatches(spark, s"$path/vectors", man.batches)
       .select("neighbor_id", "cv")
-      .hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/vectors/batch=$tok")
+      .hint("rebalance"), s"$path/vectors", s"batch=$tok")
     writeLshHot(spark, path, Seq(tok), meta.maxBucket, tok)
     commit(spark, path,
       Manifest(KindLsh, man.epoch + 1, Seq(tok), tok,
@@ -362,7 +359,7 @@ object AnnIndex {
     // WHICH census epoch applies, so blocklist and batch set can never
     // be torn apart
     val sigs = readBatches(spark, s"$path/sigs", man.batches)
-      .join(broadcast(readTable(spark, s"$path/hot/${man.hotTok}")),
+      .join(broadcast(SchemaCatalog.read(spark, s"$path/hot/${man.hotTok}")),
         Seq("t", "b"), "left_anti")
     // beyond the cap the join stays UNHINTED: AQE picks shuffle-hash
     // while the slim probe build fits executor memory and a spillable
@@ -427,10 +424,9 @@ object AnnIndex {
     val probeCount = if (nProbe > 0) nProbe else Similarity.adaptiveIvfProbes(lists)
     val cents = trainedCentroids.getOrElse(
       Similarity.seedCentroids(corpus, idCol, vecCol, lists))
-    cents.toDF("list", "centv").repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    SchemaCatalog.write(cents.toDF("list", "centv").repartition(1), s"$path/centroids")
     val tok = tokenOf(1)
-    corpus
+    val assigned = corpus
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       // zero-norm corpus rows never become candidates (matches
@@ -443,8 +439,8 @@ object AnnIndex {
       // — 32k at 1 M vectors/1024 lists); clustered, each dir gets one
       // file per shuffle partition that holds it (~1)
       .repartition(col("listp"))
-      .write.mode("overwrite").partitionBy("listp").parquet(s"$path/lists/batch=$tok")
-    val stored = spark.read.parquet(s"$path/lists/batch=$tok").count()
+    SchemaCatalog.write(assigned, s"$path/lists", s"batch=$tok", Seq("listp"))
+    val stored = readBatches(spark, s"$path/lists", Seq(tok)).count()
     val meta = IvfMeta(lists, probeCount,
       cents.headOption.map(_._2.length).getOrElse(64), nn, stored)
     commit(spark, path, Manifest(KindIvf, 1, Seq(tok), tok, ivfFields(meta)))
@@ -468,7 +464,7 @@ object AnnIndex {
     * the IVF contract (centroids are driver-small).
     */
   def ivfCentroids(spark: SparkSession, path: String): Seq[(Long, Array[Double])] =
-    readTable(spark, s"$path/centroids")
+    SchemaCatalog.read(spark, s"$path/centroids")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
@@ -492,15 +488,15 @@ object AnnIndex {
     val meta = ivfMetaOf(man)
     val cents = ivfCentroids(spark, path)
     val tok = tokenOf(man.epoch + 1)
-    batch
+    val assigned = batch
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .filter(VectorOps.norm(col("cv")) > 0)
       .withColumn("listp", listPart(AnnExprs.nearestCentroid(
         col("cv"), cents.map(_._1).toArray, cents.map(_._2).toArray)))
       .repartition(col("listp")) // one file per touched dir, not tasks×lists
-      .write.mode("overwrite").partitionBy("listp").parquet(s"$path/lists/batch=$tok")
-    val added = spark.read.parquet(s"$path/lists/batch=$tok").count()
+    SchemaCatalog.write(assigned, s"$path/lists", s"batch=$tok", Seq("listp"))
+    val added = readBatches(spark, s"$path/lists", Seq(tok)).count()
     val updated = meta.copy(rows = meta.rows + added)
     commit(spark, path,
       Manifest(KindIvf, man.epoch + 1, man.batches :+ tok, tok, ivfFields(updated)))
@@ -530,7 +526,7 @@ object AnnIndex {
     val meta = ivfMetaOf(man)
     requireFresh(meta.n, meta.rows, path)
     val probeCount = if (nProbe > 0) nProbe else meta.nProbe
-    val centroids = broadcast(readTable(spark, s"$path/centroids"))
+    val centroids = broadcast(SchemaCatalog.read(spark, s"$path/centroids"))
     val probes = Similarity.ivfQueryProbes(queries, idCol, vecCol, centroids, probeCount)
       .withColumn("listp", listPart(col("list")))
     // the probed-list union is bounded by the list count (IVF contract:
@@ -620,8 +616,7 @@ object AnnIndex {
     val lists = if (numCentroids > 0) numCentroids else Similarity.adaptiveIvfLists(nn)
     val probeCount = if (nProbe > 0) nProbe else Similarity.adaptiveIvfProbes(lists)
     val cents = Similarity.seedCentroids(corpus, idCol, vecCol, lists)
-    cents.toDF("list", "centv").repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    SchemaCatalog.write(cents.toDF("list", "centv").repartition(1), s"$path/centroids")
     // codebooks: trained per-subspace by default (the in-flight tier's
     // r20 contract — Similarity.pqTopK's trainBooks note), injected
     // books pin the geometry, trainBooks = false pins the hash-seeded
@@ -646,16 +641,15 @@ object AnnIndex {
     // indexed past a short codebook)
     val ksEff = codebooks.headOption.map(_.length).getOrElse(ks)
     val codeIds = Array.tabulate(ksEff)(_ + 1L)
-    (for (mi <- 0 until m; ci <- 0 until ksEff)
+    SchemaCatalog.write((for (mi <- 0 until m; ci <- 0 until ksEff)
       yield (mi, codeIds(ci), codebooks(mi)(ci).toSeq))
-      .toDF("mi", "code", "cw").repartition(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
+      .toDF("mi", "code", "cw").repartition(1), s"$path/codebooks")
     // ONE corpus pass: list + m codes, all row-local argmins; clustered
     // write (see ivfIndexWrite — without the pre-shuffle every task
     // fans across every list dir)
     val tok = tokenOf(1)
     val vd = col(vecCol).cast("array<double>")
-    corpus
+    val encoded = corpus
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("neighbor_id"), vd.as("v"))
       .select(col("neighbor_id") +:
@@ -665,8 +659,8 @@ object AnnIndex {
           graft.functions.AnnExprs.nearestCentroid(
             slice(col("v"), mi * sub + 1, sub), codeIds, codebooks(mi)).as(s"code_$mi")): _*)
       .repartition(col("listp"))
-      .write.mode("overwrite").partitionBy("listp").parquet(s"$path/codes/batch=$tok")
-    val stored = spark.read.parquet(s"$path/codes/batch=$tok").count()
+    SchemaCatalog.write(encoded, s"$path/codes", s"batch=$tok", Seq("listp"))
+    val stored = readBatches(spark, s"$path/codes", Seq(tok)).count()
     val meta = IvfPqMeta(lists, probeCount, m, ksEff, dim, nn, stored)
     commit(spark, path, Manifest(KindIvfPq, 1, Seq(tok), tok, ivfPqFields(meta)))
     meta
@@ -710,7 +704,7 @@ object AnnIndex {
     val batch = Similarity.normalizedSide(batch0, idCol, vecCol)
     val tok = tokenOf(man.epoch + 1)
     val vd = col(vecCol).cast("array<double>")
-    batch
+    val encoded = batch
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("neighbor_id"), vd.as("v"))
       .select(col("neighbor_id") +:
@@ -720,8 +714,8 @@ object AnnIndex {
           graft.functions.AnnExprs.nearestCentroid(
             slice(col("v"), mi * sub + 1, sub), codeIds, codebooks(mi)).as(s"code_$mi")): _*)
       .repartition(col("listp"))
-      .write.mode("overwrite").partitionBy("listp").parquet(s"$path/codes/batch=$tok")
-    val added = spark.read.parquet(s"$path/codes/batch=$tok").count()
+    SchemaCatalog.write(encoded, s"$path/codes", s"batch=$tok", Seq("listp"))
+    val added = readBatches(spark, s"$path/codes", Seq(tok)).count()
     val updated = meta.copy(rows = meta.rows + added)
     commit(spark, path,
       Manifest(KindIvfPq, man.epoch + 1, man.batches :+ tok, tok, ivfPqFields(updated)))
@@ -736,7 +730,7 @@ object AnnIndex {
 
   private def readCodebooks(spark: SparkSession, path: String,
       meta: IvfPqMeta): Array[Array[Array[Double]]] = {
-    val rows = readTable(spark, s"$path/codebooks").collect()
+    val rows = SchemaCatalog.read(spark, s"$path/codebooks").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     Array.tabulate(meta.m)(mi =>
       rows.filter(_._1 == mi).sortBy(_._2).map(_._3))
@@ -785,7 +779,7 @@ object AnnIndex {
     val queries = Similarity.normalizedSide(queries0, idCol, vecCol)
     val probeCount = if (nProbe > 0) nProbe else meta.nProbe
     val codebooks = readCodebooks(spark, path, meta)
-    val centroids = broadcast(readTable(spark, s"$path/centroids"))
+    val centroids = broadcast(SchemaCatalog.read(spark, s"$path/centroids"))
     val probes = Similarity.pqQueryProbes(queries, idCol, vecCol, centroids, probeCount)
       .withColumn("listp", listPart(col("list")))
     val probed = probes.select("listp").distinct()
@@ -870,44 +864,16 @@ object AnnIndex {
   private def deleteDir(spark: SparkSession, path: String): Unit =
     fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
 
-  /** Store-table schema catalog: a store table's schema is fixed by
-    * the index FORMAT (the manifest pins the shape), so the parquet
-    * footer-inference pass — a 1-task job plus driver gap, paid on
-    * EVERY probe's every table read — carries no information after the
-    * first read in a JVM. First read infers and caches (plans
-    * byte-identical to the uncached path); later reads of the same dir
-    * replay the cached schema. Keyed by exact directory (hot/ census
-    * epochs and rebuilt stores re-infer under their new key; a rebuilt
-    * store at the SAME path keeps the same format-fixed schema by the
-    * store contract). Same role as the Tables/BatchTable catalogs
-    * (guide §6 metadata overhead).
-    */
-  private val schemaCat =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def readTable(spark: SparkSession, dir: String): DataFrame = {
-    val r = Option(schemaCat.get(dir)).map(spark.read.schema(_)).getOrElse(spark.read)
-    val df = r.parquet(dir)
-    schemaCat.putIfAbsent(dir, df.schema)
-    df
-  }
-
   /** Read the union of the named batch directories under `root`. The
     * explicit per-batch paths (with `basePath`) are the crash-safety
     * read discipline: orphan directories from torn mutations are never
-    * listed, so they are invisible however long they linger. Schema
-    * cached per root ([[schemaCat]] — the cached schema includes the
-    * discovered `batch` partition column, so replaying it reproduces
-    * the inferred read's column set exactly).
+    * listed, so they are invisible however long they linger. Every
+    * store write records its schema in [[SchemaCatalog]], so probes and
+    * the post-write counts replay it instead of inferring it.
     */
   private def readBatches(spark: SparkSession, root: String,
-      batches: Seq[String]): DataFrame = {
-    val r = Option(schemaCat.get(root)).map(spark.read.schema(_)).getOrElse(spark.read)
-    val df = r.option("basePath", root)
-      .parquet(batches.map(b => s"$root/batch=$b"): _*)
-    schemaCat.putIfAbsent(root, df.schema)
-    df.drop("batch")
-  }
+      batches: Seq[String]): DataFrame =
+    SchemaCatalog.read(spark, root, batches.map(b => s"batch=$b")).drop("batch")
 
   private def commit(spark: SparkSession, path: String, man: Manifest): Unit = {
     val fs = fsOf(spark, path)

@@ -162,7 +162,7 @@ object Bitext {
       // from an earlier wider run, or the torn dir of a killed run,
       // must never join the audited list tables (r20 ADVICE)
       writeBatchCount(spark, outDir, nb)
-      spark.read.parquet((0 until nb).map(batchDir): _*)
+      graft.sources.SchemaCatalog.read(spark, outDir, (0 until nb).map(bi => s"pbatch$bi"))
     }
     val fwd = lists(s"$workDir/tgt_index", src, nS, s"$workDir/fwd_lists")
     val bwd = lists(s"$workDir/src_index", tgt, nT, s"$workDir/bwd_lists")

@@ -62,7 +62,10 @@ object DailyCron {
 
   /** One day, end to end: `query_data_for_day` → threshold guard → dated
     * CSV, with the reference's log-and-continue sink posture. This is the
-    * unit a scheduler invokes once per day.
+    * unit a scheduler invokes once per day. The guard is the reference's
+    * 10-row floor (`database_extractor.py:341`), raised to `minRows`
+    * when that is higher (`batched_data`'s data_threshold, [[runRange]]);
+    * either way the day's extract is counted once.
     */
   def runForDay(
       source: DataFrame,
@@ -71,11 +74,13 @@ object DailyCron {
       outDir: String,
       prefix: String,
       table: LongTable = LongTable(),
-      tzMode: TzMode = TzMode.Reference2024
-  ): Outcome =
-    Extractor.queryDataForDay(source, date, cfg, table, tzMode) match {
+      tzMode: TzMode = TzMode.Reference2024,
+      minRows: Long = 10L
+  ): Outcome = {
+    val threshold = math.max(10L, minRows)
+    Extractor.queryDataForDay(source, date, cfg, table, tzMode, minRows = threshold) match {
       case None =>
-        log.info(s"Less than 10 rows for $date; Ignoring results.")
+        log.info(s"Less than $threshold rows for $date; Ignoring results.")
         Outcome.BelowThreshold
       case Some(df) =>
         val path = s"$outDir/${prefix}_$date.csv"
@@ -89,14 +94,15 @@ object DailyCron {
             Outcome.SinkFailed(e)
         }
     }
+  }
 
   /** The reference's `batched_data` loop (`main.py:115-149`): one
-    * extract + dated CSV per day of `[start, end)`, with its
-    * data_threshold=20 guard. Returns the per-day outcomes in date
-    * order; one bad day logs and continues (same posture as [[runForDay]]).
-    * This is the faithful serial shape — for a large backfill prefer
-    * [[Extractor.backfillRange]] + [[graft.operators.ExtractOps.upsertDays]]
-    * (one plan, one shuffle, partitioned sink).
+    * [[runForDay]] per day of `[start, end)` with its data_threshold=20
+    * guard. Returns the per-day outcomes in date order; one bad day logs
+    * and continues. This is the faithful serial shape — for a large
+    * backfill prefer [[Extractor.backfillRange]] +
+    * [[graft.operators.ExtractOps.upsertDays]] (one plan, one shuffle,
+    * partitioned sink).
     */
   def runRange(
       source: DataFrame,
@@ -109,24 +115,8 @@ object DailyCron {
       tzMode: TzMode = TzMode.Reference2024,
       minRows: Long = 20L
   ): Seq[(java.time.LocalDate, Outcome)] =
-    graft.time.TimeArithmetic.datesInRange(start, end).map { date =>
-      val out = Extractor.queryDataForDay(source, date, cfg, table, tzMode) match {
-        case Some(df) if df.count() >= minRows =>
-          val path = s"$outDir/${prefix}_$date.csv"
-          try {
-            graft.operators.ExtractOps.writeDailyCsv(df, outDir, prefix, date)
-            log.info(s"csv created for $date.")
-            Outcome.Written(path)
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              log.error(e.toString); Outcome.SinkFailed(e)
-          }
-        case _ =>
-          log.info(s"Less than $minRows rows for $date; Ignoring results.")
-          Outcome.BelowThreshold
-      }
-      date -> out
-    }
+    graft.time.TimeArithmetic.datesInRange(start, end).map(date =>
+      date -> runForDay(source, date, cfg, outDir, prefix, table, tzMode, minRows))
 
   /** The full `main()` flow: load the application config (any
     * `load_config` format), derive the previous day from `now`, extract,

@@ -98,8 +98,9 @@ object Extractor {
   }
 
   /** Port of `query_data_for_day` (`database_extractor.py:369-399`): a
-    * midnight-anchored 24 h extract. Returns `None` below the reference's
-    * 10-row threshold (`database_extractor.py:341`).
+    * midnight-anchored 24 h extract. Returns `None` below `minRows` rows
+    * — the reference's 10-row threshold (`database_extractor.py:341`)
+    * unless a caller raises it ([[DailyCron.runRange]]).
     *
     * The reference derives `tz_offset` from the date itself
     * (`database_extractor.py:380-381` calls `timezone_offset(current_date)`
@@ -113,7 +114,8 @@ object Extractor {
       cfg: ExtractQueryConfig,
       table: LongTable = LongTable(),
       tzMode: TzMode = TzMode.Reference2024,
-      pivotKeys: Option[Seq[String]] = None
+      pivotKeys: Option[Seq[String]] = None,
+      minRows: Long = 10L
   ): Option[DataFrame] = {
     val midnight = date.atStartOfDay()
     val tz = tzMode match {
@@ -125,8 +127,7 @@ object Extractor {
       deltaTimeStart = DeltaTime(),
       deltaTimeEnd = DeltaTime(hours = 24),
       tzOffset = tz)
-    val df = queryDatabase(source, dayCfg, s"${date}T00:00:00Z", table, pivotKeys)
-    thresholdGuard(df, 10)
+    thresholdGuard(queryDatabase(source, dayCfg, s"${date}T00:00:00Z", table, pivotKeys), minRows)
   }
 
   /** Range backfill, scale path: where the reference loops one serial

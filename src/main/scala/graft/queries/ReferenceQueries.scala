@@ -283,7 +283,7 @@ object ReferenceQueries extends QueryGroup {
         val s1 = new java.sql.Timestamp(mx.getTime + 3600L * 1000 + 2000)
         stage(sentinel(-1L, s1)); run()
       } finally s.conf.set("spark.sql.shuffle.partitions", sessionSp)
-      s.read.parquet(s"$root/out")
+      graft.sources.FileSources.parquet(s, s"$root/out")
         .select("ts", "event_type", "value", "n_points")
         // the sentinel's OWN window never closes (the final watermark is
         // max + 2s, well short of the sentinel window's end at

@@ -234,11 +234,13 @@ object JdbcSink {
 }
 
 /** File sources with explicit schemas (schema inference is a full
-  * extra scan on CSV/JSON — never at 100 TB).
+  * extra scan on CSV/JSON — never at 100 TB). Parquet carries its
+  * schema in the footer; [[SchemaCatalog]] infers it once per file
+  * version and replays it.
   */
 object FileSources {
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    SchemaCatalog.read(spark, path)
 
   def csv(spark: SparkSession, path: String, schema: StructType, header: Boolean = true): DataFrame =
     spark.read.schema(schema).option("header", header.toString).csv(path)

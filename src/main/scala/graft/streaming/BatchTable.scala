@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.SchemaCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,43 +33,6 @@ object BatchTable {
     * filter. */
   val CompactedBatch = -1L
 
-  /** Data-column schema per table dir, recorded by the WRITER and
-    * replayed into later reads of the same dir, so each gate batch's
-    * history scan skips the parquet footer-inference pass and its
-    * 1-task job (the role Tables' schema catalog plays for fixture
-    * tables; guide §6 metadata overhead — measured at ~0.05–0.1 s of
-    * driver gap per read across the 84-job gate replays, r22).
-    * `asNullable` mirrors exactly what file-source inference reports.
-    * A dir written by another JVM misses and falls back to inference;
-    * the partition column is NOT cached — partition discovery still
-    * derives it from directory names (driver-side, no job). A table's
-    * data schema is fixed for its lifetime (the gates' contract), so
-    * last-write-wins is safe. */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def reader(spark: SparkSession, dir: String) =
-    Option(schemas.get(dir)).map(spark.read.schema(_)).getOrElse(spark.read)
-
-  // Catalyst's StructType.asNullable is private[sql]; this is its exact
-  // recursion — file-source reads report everything nullable, so the
-  // cached schema must too or the replayed read would differ from the
-  // inferred one it replaces.
-  private def asNullable(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case s: StructType =>
-        StructType(s.fields.map(f =>
-          f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case a: ArrayType =>
-        a.copy(elementType = asNullable(a.elementType), containsNull = true)
-      case m: MapType =>
-        m.copy(keyType = asNullable(m.keyType),
-          valueType = asNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
-  }
-
   /** Idempotent per-batch write: overwrite the `__batch_id=N` partition
     * DIRECTORY wholesale, leaving other batches' partitions untouched —
     * the same replace-own-partition semantics the dynamic-overwrite
@@ -81,13 +45,11 @@ object BatchTable {
     * per scan/shuffle task (32 per batch at bench core counts — paid
     * again by every later gate's history scan), and a large one still
     * splits at the advisory partition size (guide-standard output
-    * sizing; verdicts are unaffected — same rows, fewer files). */
-  def writeBatchPartition(df: DataFrame, batchId: Long, dir: String): Unit = {
-    schemas.put(dir, asNullable(df.schema).asInstanceOf[org.apache.spark.sql.types.StructType])
-    df.hint("rebalance")
-      .write.mode("overwrite")
-      .parquet(s"$dir/$BatchCol=$batchId")
-  }
+    * sizing; verdicts are unaffected — same rows, fewer files). The
+    * write goes through [[SchemaCatalog]], so each gate batch's later
+    * history scan replays the written schema instead of inferring it. */
+  def writeBatchPartition(df: DataFrame, batchId: Long, dir: String): Unit =
+    SchemaCatalog.write(df.hint("rebalance"), dir, s"$BatchCol=$batchId")
 
   /** Read the table EXCLUDING `batchId`'s own partition — the gate's
     * history view: on replay, the prior attempt's rows must not gate
@@ -96,13 +58,12 @@ object BatchTable {
     * columns. Call only when [[hasData]] — a partitioned read of an
     * absent/empty dir throws. */
   def readExcluding(spark: SparkSession, dir: String, batchId: Long): DataFrame =
-    reader(spark, dir).parquet(dir).filter(col(BatchCol) =!= batchId).drop(BatchCol)
+    SchemaCatalog.read(spark, dir).filter(col(BatchCol) =!= batchId).drop(BatchCol)
 
   /** Read the whole table (all batches, data columns only) — the
-    * consumer-side read of a finished replay/ingest, through the same
-    * schema catalog as [[readExcluding]]. */
+    * consumer-side read of a finished replay/ingest. */
   def readAll(spark: SparkSession, dir: String): DataFrame =
-    reader(spark, dir).parquet(dir).drop(BatchCol)
+    SchemaCatalog.read(spark, dir).drop(BatchCol)
 
   /** Maintenance pass: fold the per-batch partitions for batches
     * `0..upToBatch` (plus any prior compaction) into the single
@@ -151,9 +112,10 @@ object BatchTable {
     fs.delete(tmp, true) // stale temp from a crashed prior run
     // one deduplicated rewrite of the folded partitions (distinct makes
     // a crash-before-delete leftover self-healing on the next run); the
-    // partition column comes from the directory name, so the staged
-    // files carry only the data columns
-    reader(spark, dir).parquet(foldable.map(b => s"$dir/$BatchCol=$b"): _*)
+    // partition column is discovered from the directory names and
+    // dropped, so the staged files carry only the data columns
+    SchemaCatalog.read(spark, dir, foldable.map(b => s"$BatchCol=$b"))
+      .drop(BatchCol)
       .distinct()
       .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 8))
       .write.mode("overwrite").parquet(tmp.toString)

@@ -80,6 +80,25 @@ class DailyCronSpec extends SparkSuite {
       java.time.LocalDate.of(2030, 1, 1), java.time.LocalDate.of(2030, 1, 3),
       cfg, dir, prefix = "p0", table = ET)
     assert(empty.forall(_._2 == DailyCron.Outcome.BelowThreshold))
+    // a day of 15 rows clears the reference's 10-row floor but not
+    // batched_data's data_threshold=20: below threshold, nothing written
+    import org.apache.spark.sql.functions._
+    val fixture = Tables.events(spark, "/root/testdata/sf0.001")
+    val day = java.time.LocalDate.of(2030, 6, 6)
+    val fifteen = fixture.limit(15)
+      .withColumn("ts", timestamp_seconds(lit(day.atTime(12, 0)
+        .toEpochSecond(java.time.ZoneOffset.UTC)) +
+        row_number().over(org.apache.spark.sql.expressions.Window.orderBy("event_id")))
+        .cast(fixture.schema("ts").dataType))
+      .withColumn("event_type", lit("spec_day"))
+      .withColumn("value", lit(1.0))
+    val source = fixture.unionByName(fifteen)
+    def one(minRows: Long) = DailyCron.runRange(source, day, day.plusDays(1),
+      cfg, dir, prefix = "p1", table = ET, tzMode = TzMode.Fixed, minRows = minRows)
+    assert(one(20L) == Seq(day -> DailyCron.Outcome.BelowThreshold))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"p1_$day.csv")))
+    // the same day does qualify at the 10-row floor (the spec is not vacuous)
+    assert(one(10L).map(_._2).forall(_.isInstanceOf[DailyCron.Outcome.Written]))
   }
 
   test("sink failure is logged and swallowed, not thrown (database_extractor.py:352-353)") {
