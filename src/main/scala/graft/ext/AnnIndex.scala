@@ -132,37 +132,15 @@ object AnnIndex {
       maxBucket: Int = 100000,
       n: Long = -1L
   ): LshMeta = {
-    val spark = corpus.sparkSession
-    deleteDir(spark, path)
+    deleteDir(corpus.sparkSession, path)
     val nn = Dedup.corpusCount(corpus, n, "lshIndexWrite")
     val bits = Dedup.adaptiveLshBits(nn)
-    val tables = Dedup.multiprobeTables(bits)
-    val planes = Similarity.hyperplanesPrefix(tables, bits, dim, seed)
-    val base = corpus
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .filter(VectorOps.norm(col("cv")) > 0)
-    val tok = tokenOf(1)
-    // sigs are stored UNCAPPED; the hot-bucket census lives in its own
-    // small `hot/` blocklist so [[lshIndexAppend]] can maintain it
-    // without rewriting the signature table (a bucket crossing the cap
-    // only AFTER an append must still drop — a pre-capped store could
-    // never resurrect the rows it already threw away)
-    SchemaCatalog.write(base.select(col("neighbor_id"),
-      posexplode(AnnExprs.lshBuckets(col("cv"), planes)).as(Seq("t", "b")))
-      .hint("rebalance"), // size-targeted files, not one per upstream task
-      s"$path/sigs", s"batch=$tok")
-    SchemaCatalog.write(base.hint("rebalance"), s"$path/vectors", s"batch=$tok")
-    writeLshHot(spark, path, Seq(tok), maxBucket, tok)
-    val stored = readBatches(spark, s"$path/vectors", Seq(tok)).count()
-    val meta = LshMeta(tables, bits, dim, seed, maxBucket, nn, stored)
+    val empty = LshMeta(Dedup.multiprobeTables(bits), bits, dim, seed, maxBucket, nn, 0L)
     // rawRows tracks the rows actually INGESTED (pre-filter), not the
     // shape-sizing `n` the caller may have pinned to a larger target
-    // corpus: an append adds its own raw count, so seeding from `n`
-    // would double-count the headroom
-    val rawRows = if (n >= 0L) corpus.count() else nn
-    commit(spark, path, Manifest(KindLsh, 1, Seq(tok), tok, lshFields(meta, rawRows)))
-    meta
+    // corpus: counting it from `n` would double-count the headroom
+    lshWriteBatch(corpus.sparkSession, path, Manifest(KindLsh, 0, Nil, "", lshFields(empty, 0L)),
+      empty, corpus, idCol, vecCol, if (n >= 0L) None else Some(nn))
   }
 
   /** Recompute the hot-bucket blocklist from the named signature
@@ -223,15 +201,29 @@ object AnnIndex {
       vecCol: String
   ): LshMeta = {
     val man = readManifest(spark, path, KindLsh)
-    val meta = lshMetaOf(man)
+    lshWriteBatch(spark, path, man, lshMetaOf(man), batch, idCol, vecCol, None)
+  }
+
+  /** The one mutation body behind [[lshIndexWrite]] (from the empty
+    * epoch-0 index) and [[lshIndexAppend]]: hash `batch` with the
+    * planes `meta` pins, write its slim sigs and its vectors into the
+    * next batch directory (mode overwrite: a torn previous attempt at
+    * this epoch left uncommitted leftovers in exactly these dirs —
+    * replace, never mix), recompute the hot census over the enlarged
+    * batch set, then commit. `rawCount` is the batch's pre-filter row
+    * count when the caller already knows it; otherwise it is counted.
+    */
+  private def lshWriteBatch(spark: SparkSession, path: String, man: Manifest,
+      meta: LshMeta, batch: DataFrame, idCol: String, vecCol: String,
+      rawCount: Option[Long]): LshMeta = {
     val planes = Similarity.hyperplanesPrefix(meta.tables, meta.bits, meta.dim, meta.seed)
     val tok = tokenOf(man.epoch + 1)
-    val base = batch
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .filter(VectorOps.norm(col("cv")) > 0)
-    // mode overwrite: a torn previous attempt at this epoch left
-    // uncommitted leftovers in exactly these dirs — replace, never mix
+    val base = Similarity.corpusSide(batch, idCol, vecCol)
+    // sigs are stored UNCAPPED; the hot-bucket census lives in its own
+    // small `hot/` blocklist so an append can maintain it without
+    // rewriting the signature table (a bucket crossing the cap only
+    // AFTER an append must still drop — a pre-capped store could never
+    // resurrect the rows it already threw away)
     SchemaCatalog.write(base.select(col("neighbor_id"),
       posexplode(AnnExprs.lshBuckets(col("cv"), planes)).as(Seq("t", "b")))
       .hint("rebalance"), // size-targeted files, not one per upstream task
@@ -239,11 +231,10 @@ object AnnIndex {
     SchemaCatalog.write(base.hint("rebalance"), s"$path/vectors", s"batch=$tok")
     writeLshHot(spark, path, man.batches :+ tok, meta.maxBucket, tok)
     val added = readBatches(spark, s"$path/vectors", Seq(tok)).count()
-    val addedRaw = batch.count()
     val updated = meta.copy(rows = meta.rows + added)
     commit(spark, path,
       Manifest(KindLsh, man.epoch + 1, man.batches :+ tok, tok,
-        lshFields(updated, lshRawRows(man) + addedRaw)))
+        lshFields(updated, lshRawRows(man) + rawCount.getOrElse(batch.count()))))
     updated
   }
 
@@ -313,30 +304,14 @@ object AnnIndex {
     val meta = lshMetaOf(man)
     requireFresh(meta.n, meta.rows, path)
     val planes = Similarity.hyperplanesPrefix(meta.tables, meta.bits, meta.dim, meta.seed)
-    val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(VectorOps.norm(col("qv")) > 0)
-    // probe shape from BOTH sizes, like the in-flight operator: a
-    // corpus-like query batch (knn-graph / bitext lists) auto-selects
-    // the dedup coupling instead of the flat deep retrieval shape —
-    // the 10⁹-row fold must be impossible with default args. The
-    // corpus basis is the manifest's RAW count (zero-norm rows
-    // included), the same basis the in-flight operator counts — using
-    // the stored positive-norm `rows` could flip the flat-vs-coupled
-    // decision at the maxFlatQ boundary on corpora with zero-norm
-    // rows and break indexed-equals-in-flight identity (r19 advice)
-    val rawN = lshRawRows(man)
-    val (budget, depth) =
-      if (probeBudget > 0 || probeDepth > 0)
-        (if (probeBudget > 0) probeBudget else Similarity.TopKProbeBudget,
-         if (probeDepth > 0) probeDepth else Similarity.TopKProbeDepth)
-      else {
-        val keysFlat = Similarity.probeKeysPerTable(
-          meta.bits, Similarity.TopKProbeBudget, Similarity.TopKProbeDepth)
-        val maxFlatQ = Similarity.FlatProbeCorpusFactor * rawN / math.max(1L, keysFlat)
-        val qShape = if (queriesCount >= 0L) queriesCount
-                     else qBase.limit(math.min(maxFlatQ + 1L, Int.MaxValue.toLong).toInt).count()
-        Similarity.lshAutoShape(meta.bits, qShape, rawN)
-      }
+    val qBase = Similarity.querySide(queries, idCol, vecCol)
+    // the corpus basis is the manifest's RAW count (zero-norm rows
+    // included), the basis the in-flight operator counts — the stored
+    // positive-norm `rows` could flip the flat-vs-coupled decision at
+    // the maxFlatQ boundary and break indexed-equals-in-flight
+    // identity (r19 advice)
+    val (budget, depth) = Similarity.lshProbeShape(meta.bits, lshRawRows(man), qBase,
+      queriesCount, probeBudget, probeDepth)
     val qx = qBase.select(col("query_id"),
         posexplode(AnnExprs.lshProbeKeys(col("qv"), planes, budget, depth))
           .as(Seq("t", "bs")))
@@ -346,8 +321,7 @@ object AnnIndex {
     // queries per broadcast byte than the in-flight operator)
     val keys = Similarity.probeKeysPerTable(meta.bits, budget, depth)
     val maxQ = probeBroadcastMax / math.max(1L, meta.tables.toLong * keys * 40L)
-    val qn = if (queriesCount >= 0L) queriesCount
-             else qBase.limit(math.min(maxQ + 1L, Int.MaxValue.toLong).toInt).count()
+    val qn = Similarity.boundedCount(qBase, maxQ, queriesCount)
     // candidate ids stay SLIM through the bucket join and the distinct
     // (~16 B rows — the candidate stream is the T×probe-fold expansion,
     // never carry vectors through it: the r15 refine lesson), then one
@@ -369,18 +343,13 @@ object AnnIndex {
                 else sigs.join(qx, Seq("t", "b")))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    // the qv rehydrate has its own (much larger) broadcast bound; qn
-    // above is truncated at the slim-tier maxQ+1, so it must NOT gate
-    // this decision — a truncated count passes for any set size and
-    // broadcasts unconditionally (r18 review catch). Row size follows
-    // the INDEX's dim (a hard-coded dim-64 size underestimated a
-    // 1024-dim index's rows ~13x, letting the broadcast blow past the
-    // cap the bound exists to enforce — r18 advice)
+    // the qv rehydrate has its own (much larger) broadcast bound and so
+    // its own decision count (r18 review catch). Row size follows the
+    // INDEX's dim (a hard-coded dim-64 size underestimated a 1024-dim
+    // index's rows ~13x — r18 advice)
     val maxQv = probeBroadcastMax / (40L + 4L * meta.dim)
-    val qvn = if (queriesCount >= 0L) queriesCount
-              else qBase.limit(math.min(maxQv + 1L, Int.MaxValue.toLong).toInt).count()
     val qvSide =
-      if (qvn <= maxQv) broadcast(qBase)
+      if (Similarity.boundedCount(qBase, maxQv, queriesCount) <= maxQv) broadcast(qBase)
       else qBase
     val scored = cand
       .join(readBatches(spark, s"$path/vectors", man.batches).hint("shuffle_hash"),
@@ -418,33 +387,12 @@ object AnnIndex {
     import spark.implicits._
     deleteDir(spark, path)
     val nn = Dedup.corpusCount(corpus, n, "ivfIndexWrite")
-    val lists =
-      if (numCentroids > 0) numCentroids
-      else trainedCentroids.map(_.size).getOrElse(Similarity.adaptiveIvfLists(nn))
-    val probeCount = if (nProbe > 0) nProbe else Similarity.adaptiveIvfProbes(lists)
-    val cents = trainedCentroids.getOrElse(
-      Similarity.seedCentroids(corpus, idCol, vecCol, lists))
+    val (lists, probeCount, cents) = Similarity.ivfGeometry(corpus, idCol, vecCol,
+      numCentroids, nProbe, trainedCentroids, nn)
     SchemaCatalog.write(cents.toDF("list", "centv").repartition(1), s"$path/centroids")
-    val tok = tokenOf(1)
-    val assigned = corpus
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      // zero-norm corpus rows never become candidates (matches
-      // ivfTopK's assignment filter; seeding above stays raw — l2-only)
-      .filter(VectorOps.norm(col("cv")) > 0)
-      .withColumn("listp", listPart(AnnExprs.nearestCentroid(
-        col("cv"), cents.map(_._1).toArray, cents.map(_._2).toArray)))
-      // pre-shuffle by the partition column: without this, every writer
-      // task fans out across every list dir (tasks × lists small files
-      // — 32k at 1 M vectors/1024 lists); clustered, each dir gets one
-      // file per shuffle partition that holds it (~1)
-      .repartition(col("listp"))
-    SchemaCatalog.write(assigned, s"$path/lists", s"batch=$tok", Seq("listp"))
-    val stored = readBatches(spark, s"$path/lists", Seq(tok)).count()
-    val meta = IvfMeta(lists, probeCount,
-      cents.headOption.map(_._2.length).getOrElse(64), nn, stored)
-    commit(spark, path, Manifest(KindIvf, 1, Seq(tok), tok, ivfFields(meta)))
-    meta
+    val empty = IvfMeta(lists, probeCount, cents.headOption.map(_._2.length).getOrElse(64), nn, 0L)
+    ivfWriteBatch(spark, path, Manifest(KindIvf, 0, Nil, "", ivfFields(empty)), empty, cents,
+      corpus, idCol, vecCol)
   }
 
   private def ivfFields(meta: IvfMeta): Seq[(String, Long)] =
@@ -485,26 +433,46 @@ object AnnIndex {
       vecCol: String
   ): IvfMeta = {
     val man = readManifest(spark, path, KindIvf)
-    val meta = ivfMetaOf(man)
-    val cents = ivfCentroids(spark, path)
+    ivfWriteBatch(spark, path, man, ivfMetaOf(man), ivfCentroids(spark, path),
+      batch, idCol, vecCol)
+  }
+
+  /** The one mutation body behind [[ivfIndexWrite]] (from the empty
+    * epoch-0 index, centroids passed in memory — no read-back) and
+    * [[ivfIndexAppend]]: assign `batch` to the pinned centroids
+    * ([[Similarity.ivfAssigned]]), write it into the next batch's list
+    * partitions, count it, commit.
+    */
+  private def ivfWriteBatch(spark: SparkSession, path: String, man: Manifest,
+      meta: IvfMeta, cents: Seq[(Long, Array[Double])], batch: DataFrame,
+      idCol: String, vecCol: String): IvfMeta = {
     val tok = tokenOf(man.epoch + 1)
-    val assigned = batch
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .filter(VectorOps.norm(col("cv")) > 0)
-      .withColumn("listp", listPart(AnnExprs.nearestCentroid(
-        col("cv"), cents.map(_._1).toArray, cents.map(_._2).toArray)))
-      .repartition(col("listp")) // one file per touched dir, not tasks×lists
-    SchemaCatalog.write(assigned, s"$path/lists", s"batch=$tok", Seq("listp"))
-    val added = readBatches(spark, s"$path/lists", Seq(tok)).count()
+    val added = writeListBatch(spark, path, "lists", tok,
+      Similarity.ivfAssigned(batch, idCol, vecCol, cents))
     val updated = meta.copy(rows = meta.rows + added)
     commit(spark, path,
       Manifest(KindIvf, man.epoch + 1, man.batches :+ tok, tok, ivfFields(updated)))
     updated
   }
 
+  /** Write `rows` (carrying the assigned IVF `list`) into batch `tok` of
+    * the list-partitioned store `root` and return the stored row count.
+    * Partition values are [[listPart]] strings, and the frame is
+    * pre-shuffled by them: without it every writer task fans out across
+    * every list dir (tasks × lists small files — 32k at 1 M
+    * vectors/1024 lists); clustered, each dir gets ~one file.
+    */
+  private def writeListBatch(spark: SparkSession, path: String, root: String,
+      tok: String, rows: DataFrame): Long = {
+    SchemaCatalog.write(
+      rows.withColumn("listp", listPart(col("list"))).drop("list").repartition(col("listp")),
+      s"$path/$root", s"batch=$tok", Seq("listp"))
+    readBatches(spark, s"$path/$root", Seq(tok)).count()
+  }
+
   /** Approximate top-k against a persisted IVF index. The probed-list
-    * choice is [[Similarity.ivfQueryProbes]] — the exact helper the
+    * choice is [[Similarity.ivfQueryProbes]] and the probe join and
+    * cosine [[Similarity.ivfProbeJoin]] — the exact helpers the
     * in-flight operator runs — and the batch's probed-list union
     * becomes a PARTITION FILTER on `lists/`, so the scan reads only
     * the probed lists' bytes (~nProbe/lists of the corpus for a
@@ -529,32 +497,22 @@ object AnnIndex {
     val centroids = broadcast(SchemaCatalog.read(spark, s"$path/centroids"))
     val probes = Similarity.ivfQueryProbes(queries, idCol, vecCol, centroids, probeCount)
       .withColumn("listp", listPart(col("list")))
-    // the probed-list union is bounded by the list count (IVF contract:
-    // centroids are driver-small), so collecting it for the partition
-    // filter is O(lists), never O(corpus)
-    val probed = probes.select("listp").distinct()
-      .collect().map(_.getString(0)).sorted
     val assigned = readBatches(spark, s"$path/lists", man.batches)
-      .filter(col("listp").isin(probed: _*))
+      .filter(col("listp").isin(probedLists(probes): _*))
       .select("neighbor_id", "cv", "listp")
-    // same probe-side broadcast-vs-shuffle tier switch as ivfTopK;
-    // probe rows carry qv — size by the index's dim, like the LSH
-    // rehydrate bound
-    val maxQ = probeBroadcastMax / math.max(1L, probeCount.toLong * (40L + 4L * meta.dim))
-    val qn = if (queriesCount >= 0L) queriesCount
-             else queries.limit(math.min(maxQ + 1L, Int.MaxValue.toLong).toInt).count()
-    // unhinted beyond the cap — AQE picks shuffle-hash vs spillable
-    // sort-merge from actual sizes (see lshTopKIndexed)
-    val probeSide =
-      if (qn <= maxQ) broadcast(probes.drop("list"))
-      else probes.drop("list")
     Similarity.rankedTopK(
-      assigned.join(probeSide, Seq("listp"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("cos", round(VectorOps.cosine(col("qv"), col("cv")), 4))
+      Similarity.ivfProbeJoin(assigned, probes.drop("list"), "listp", queries, probeCount,
+        meta.dim, queriesCount, probeBroadcastMax)
         .select("query_id", "neighbor_id", "cos"),
       "cos", scoreDesc = true, k)
   }
+
+  /** The batch's probed-list union, for the partition filter — bounded
+    * by the list count (IVF contract: centroids are driver-small), so
+    * collecting it is O(lists), never O(corpus).
+    */
+  private def probedLists(probes: DataFrame): Seq[String] =
+    probes.select("listp").distinct().collect().map(_.getString(0)).sorted.toSeq
 
   // ------------------------------------------------------------------
   // IVF-PQ
@@ -574,11 +532,11 @@ object AnnIndex {
     * is PARTITIONED BY the assigned IVF list like [[ivfIndexWrite]]'s
     * `lists/`, so a probe reads ~nProbe/lists of the already-compressed
     * bytes. `centroids/` and `codebooks/` (m × ks codewords) persist
-    * the pinned geometry. Derivations are byte-identical to the
-    * in-flight [[Similarity.ivfPqTopK]] (adaptive lists/probes,
-    * hash-seeded codebooks — pass `trainedCodebooks`, e.g.
-    * [[Similarity.pqTrainCodebooks]], to persist k-means-refined books
-    * instead), so the indexed probe is answer-identical over the same
+    * the pinned geometry. Derivations are the in-flight
+    * [[Similarity.ivfPqTopK]]'s own helpers (adaptive lists/probes,
+    * codebooks trained by default, `trainBooks = false` for the
+    * hash-seeded stand-in, `trainedCodebooks` to persist injected
+    * books), so the indexed probe is answer-identical over the same
     * geometry (AnnIndexSpec pins it). Any previous index at `path` is
     * removed first. Returns the persisted meta.
     */
@@ -601,69 +559,29 @@ object AnnIndex {
       trainBooks: Boolean = true
   ): IvfPqMeta = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sub = dim / m
-    // L2-normalized like the in-flight tier (Similarity.normalizedSide
-    // — L2 monotone in cosine on unit vectors; zero-norm rows out), so
-    // the persisted codes can never disagree with the in-flight
-    // encoding
-    val corpus = Similarity.normalizedSide(corpus0, idCol, vecCol)
-    val spark = corpus.sparkSession
+    val spark = corpus0.sparkSession
     import spark.implicits._
     deleteDir(spark, path)
     // adaptive shape from the PRE-filter frame — matches the oracle's
-    // count(*) and the in-flight ivfPqTopK (r18 advice)
+    // count(*) and the in-flight ivfPqTopK (r18 advice); seeds from the
+    // L2-normalized side like the in-flight tier
     val nn = Dedup.corpusCount(corpus0, n, "ivfPqIndexWrite")
-    val lists = if (numCentroids > 0) numCentroids else Similarity.adaptiveIvfLists(nn)
-    val probeCount = if (nProbe > 0) nProbe else Similarity.adaptiveIvfProbes(lists)
-    val cents = Similarity.seedCentroids(corpus, idCol, vecCol, lists)
+    val (lists, probeCount, cents) = Similarity.ivfGeometry(
+      Similarity.normalizedSide(corpus0, idCol, vecCol), idCol, vecCol,
+      numCentroids, nProbe, None, nn)
     SchemaCatalog.write(cents.toDF("list", "centv").repartition(1), s"$path/centroids")
-    // codebooks: trained per-subspace by default (the in-flight tier's
-    // r20 contract — Similarity.pqTopK's trainBooks note), injected
-    // books pin the geometry, trainBooks = false pins the hash-seeded
-    // stand-in (parity/oracle cells)
-    val codebooks: Array[Array[Array[Double]]] = trainedCodebooks.getOrElse {
-      if (trainBooks)
-        Similarity.pqTrainCodebooks(corpus0, idCol, vecCol, m = m, ks = ks, dim = dim)
-      else {
-        val keyHash = expr(
-          s"cast(conv(substr(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)")
-        val seeds: Array[Array[Double]] = corpus
-          .select(col(vecCol).cast("array<double>").as("v"), keyHash.as("h"),
-            col(idCol).cast("long").as("id"))
-          .orderBy(col("h"), col("id")).limit(ks)
-          .collect().map(_.getSeq[Double](0).toArray)
-        Array.tabulate(m)(mi => seeds.map(s => s.slice(mi * sub, (mi + 1) * sub)))
-      }
-    }
+    val codebooks = Similarity.pqCodebooks(corpus0, idCol, vecCol, m, ks, dim,
+      trainedCodebooks, trainBooks)
     // effective ks: a corpus smaller than ks yields fewer seed rows —
-    // persist (and record in meta) the codebook actually built, like
-    // the in-flight operator (r18 review catch: the 0-until-ks loop
-    // indexed past a short codebook)
+    // persist (and record in meta) the codebook actually built (r18
+    // review catch: the 0-until-ks loop indexed past a short codebook)
     val ksEff = codebooks.headOption.map(_.length).getOrElse(ks)
-    val codeIds = Array.tabulate(ksEff)(_ + 1L)
     SchemaCatalog.write((for (mi <- 0 until m; ci <- 0 until ksEff)
-      yield (mi, codeIds(ci), codebooks(mi)(ci).toSeq))
+      yield (mi, ci + 1L, codebooks(mi)(ci).toSeq))
       .toDF("mi", "code", "cw").repartition(1), s"$path/codebooks")
-    // ONE corpus pass: list + m codes, all row-local argmins; clustered
-    // write (see ivfIndexWrite — without the pre-shuffle every task
-    // fans across every list dir)
-    val tok = tokenOf(1)
-    val vd = col(vecCol).cast("array<double>")
-    val encoded = corpus
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), vd.as("v"))
-      .select(col("neighbor_id") +:
-        listPart(graft.functions.AnnExprs.nearestCentroid(
-          col("v"), cents.map(_._1).toArray, cents.map(_._2).toArray)).as("listp") +:
-        (0 until m).map(mi =>
-          graft.functions.AnnExprs.nearestCentroid(
-            slice(col("v"), mi * sub + 1, sub), codeIds, codebooks(mi)).as(s"code_$mi")): _*)
-      .repartition(col("listp"))
-    SchemaCatalog.write(encoded, s"$path/codes", s"batch=$tok", Seq("listp"))
-    val stored = readBatches(spark, s"$path/codes", Seq(tok)).count()
-    val meta = IvfPqMeta(lists, probeCount, m, ksEff, dim, nn, stored)
-    commit(spark, path, Manifest(KindIvfPq, 1, Seq(tok), tok, ivfPqFields(meta)))
-    meta
+    val empty = IvfPqMeta(lists, probeCount, m, ksEff, dim, nn, 0L)
+    ivfPqWriteBatch(spark, path, Manifest(KindIvfPq, 0, Nil, "", ivfPqFields(empty)), empty,
+      cents, codebooks, corpus0, idCol, vecCol)
   }
 
   private def ivfPqFields(meta: IvfPqMeta): Seq[(String, Long)] =
@@ -697,25 +615,24 @@ object AnnIndex {
   ): IvfPqMeta = {
     val man = readManifest(spark, path, KindIvfPq)
     val meta = ivfPqMetaOf(man)
-    val sub = meta.dim / meta.m
-    val cents = ivfCentroids(spark, path)
-    val codebooks = readCodebooks(spark, path, meta)
-    val codeIds = Array.tabulate(meta.ks)(_ + 1L)
-    val batch = Similarity.normalizedSide(batch0, idCol, vecCol)
+    ivfPqWriteBatch(spark, path, man, meta, ivfCentroids(spark, path),
+      readCodebooks(spark, path, meta), batch0, idCol, vecCol)
+  }
+
+  /** The one mutation body behind [[ivfPqIndexWrite]] (from the empty
+    * epoch-0 index, geometry passed in memory — no read-back) and
+    * [[ivfPqIndexAppend]]: L2-normalize `batch0`, encode list + m codes
+    * in one row-local pass ([[Similarity.pqEncoded]]), write it into
+    * the next batch's list partitions, count it, commit.
+    */
+  private def ivfPqWriteBatch(spark: SparkSession, path: String, man: Manifest,
+      meta: IvfPqMeta, cents: Seq[(Long, Array[Double])],
+      codebooks: Array[Array[Array[Double]]], batch0: DataFrame,
+      idCol: String, vecCol: String): IvfPqMeta = {
+    val encoded = Similarity.pqEncoded(Similarity.normalizedSide(batch0, idCol, vecCol),
+      idCol, vecCol, meta.dim / meta.m, codebooks, Some(cents))
     val tok = tokenOf(man.epoch + 1)
-    val vd = col(vecCol).cast("array<double>")
-    val encoded = batch
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), vd.as("v"))
-      .select(col("neighbor_id") +:
-        listPart(graft.functions.AnnExprs.nearestCentroid(
-          col("v"), cents.map(_._1).toArray, cents.map(_._2).toArray)).as("listp") +:
-        (0 until meta.m).map(mi =>
-          graft.functions.AnnExprs.nearestCentroid(
-            slice(col("v"), mi * sub + 1, sub), codeIds, codebooks(mi)).as(s"code_$mi")): _*)
-      .repartition(col("listp"))
-    SchemaCatalog.write(encoded, s"$path/codes", s"batch=$tok", Seq("listp"))
-    val added = readBatches(spark, s"$path/codes", Seq(tok)).count()
+    val added = writeListBatch(spark, path, "codes", tok, encoded)
     val updated = meta.copy(rows = meta.rows + added)
     commit(spark, path,
       Manifest(KindIvfPq, man.epoch + 1, man.batches :+ tok, tok, ivfPqFields(updated)))
@@ -740,9 +657,10 @@ object AnnIndex {
     * partition filter on the COMPRESSED `codes/` (the scan reads
     * ~nProbe/lists of m-codes-per-vector bytes — raw vectors are never
     * touched), query-side ADC distance tables from the pinned
-    * codebooks, per-pair cost `m` lookups. Answer-identical to the
-    * in-flight [[Similarity.ivfPqTopK]] over the same geometry
-    * (AnnIndexSpec pins it).
+    * codebooks, per-pair cost `m` lookups ([[Similarity.adcTopK]], the
+    * in-flight tier's own scorer). Answer-identical to the in-flight
+    * [[Similarity.ivfPqTopK]] over the same geometry (AnnIndexSpec
+    * pins it).
     */
   def ivfPqTopKIndexed(
       spark: SparkSession,
@@ -767,57 +685,34 @@ object AnnIndex {
       rerank: Int = -1,
       rerankFrom: Option[DataFrame] = None
   ): DataFrame = {
-    val rr = if (rerank < 0) Similarity.defaultRerank(k) else rerank
-    require(rr <= 0 || rerankFrom.nonEmpty,
+    require(rerank == 0 || rerankFrom.nonEmpty,
       "rerank needs rerankFrom: the IVF-PQ index stores codes only — " +
         "pass the raw-vector table the shortlist rehydrates from " +
         "(or set rerank = 0 explicitly for the pure-ADC tier)")
     val man = readManifest(spark, path, KindIvfPq)
     val meta = ivfPqMetaOf(man)
     requireFresh(meta.n, meta.rows, path)
-    val sub = meta.dim / meta.m
     val queries = Similarity.normalizedSide(queries0, idCol, vecCol)
     val probeCount = if (nProbe > 0) nProbe else meta.nProbe
     val codebooks = readCodebooks(spark, path, meta)
     val centroids = broadcast(SchemaCatalog.read(spark, s"$path/centroids"))
     val probes = Similarity.pqQueryProbes(queries, idCol, vecCol, centroids, probeCount)
       .withColumn("listp", listPart(col("list")))
-    val probed = probes.select("listp").distinct()
-      .collect().map(_.getString(0)).sorted
     val codes = readBatches(spark, s"$path/codes", man.batches)
-      .filter(col("listp").isin(probed: _*))
+      .filter(col("listp").isin(probedLists(probes): _*))
       .select("neighbor_id", "listp" +: (0 until meta.m).map(mi => s"code_$mi"): _*)
-    val vd = col(vecCol).cast("array<double>")
-    val dtables = queries
-      .select(col(idCol).as("query_id") +: (0 until meta.m).map(mi =>
-        slice(vd, mi * sub + 1, sub).as(s"sub_$mi")): _*)
-      .select(col("query_id") +: (0 until meta.m).map { mi =>
-        // compiled table build (VecExprs.pqDistTable): identical fold
-        // order to the former transform+aggregate HOF, evaluated in
-        // one codegen loop instead of ks x dim interpreted lambdas
-        graft.functions.VecExprs.pqDistTable(col(s"sub_$mi"), codebooks(mi)).as(s"dt_$mi")
-      }: _*)
     // probe rows carry the m distance tables (~m*ks*8 B each), so the
     // broadcast affords fewer queries per byte than the raw-IVF probe;
     // unhinted beyond the cap (AQE shuffle-hash vs spillable sort-merge)
     val rowBytes = probeCount.toLong * (meta.m.toLong * meta.ks * 8L + 64L)
     val maxQ = probeBroadcastMax / math.max(1L, rowBytes)
-    val qn = if (queriesCount >= 0L) queriesCount
-             else queries.limit(math.min(maxQ + 1L, Int.MaxValue.toLong).toInt).count()
-    val probeSide0 = probes.drop("list").join(dtables, Seq("query_id"))
-    val probeSide = if (qn <= maxQ) broadcast(probeSide0) else probeSide0
-    val adist = (0 until meta.m).map(mi =>
-      element_at(col(s"dt_$mi"), col(s"code_$mi").cast("int"))).reduce(_ + _)
-    val adc = Similarity.rankedTopK(
-      codes.join(probeSide, Seq("listp"))
+    val bcast = Similarity.boundedCount(queries, maxQ, queriesCount) <= maxQ
+    Similarity.adcTopK(queries, idCol, vecCol, meta.dim / meta.m, codebooks, k, rerank,
+      Similarity.normalizedSide(rerankFrom.get, idCol, vecCol)) { dt =>
+      val probeSide = probes.drop("list").join(dt, Seq("query_id"))
+      codes.join(if (bcast) broadcast(probeSide) else probeSide, Seq("listp"))
         .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist", round(adist, 4))
-        .select("query_id", "neighbor_id", "adist"),
-      "adist", scoreDesc = false, if (rr > 0) rr * k else k)
-    if (rr <= 0) adc
-    else Similarity.rerankShortlist(adc,
-      Similarity.normalizedSide(rerankFrom.get, idCol, vecCol),
-      queries, idCol, vecCol, k)
+    }
   }
 
   // ------------------------------------------------------------------

@@ -49,6 +49,24 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", scoreCol)
   }
 
+  /** The two sides of every raw-vector ANN tier: (neighbor_id, cv) and
+    * (query_id, qv). Zero-norm vectors are excluded on BOTH sides — the
+    * ANN family contract: a zero vector has no direction, its cosine
+    * is 0/0 = NaN (which sorts LARGEST under descending order, ranking
+    * first while carrying no similarity signal) and under ANSI a
+    * runtime divide-by-zero. The corpus side is spread over the default
+    * parallelism: a small parquet corpus arrives as one split, and a
+    * broadcast join's parallelism follows its stream side.
+    */
+  private[ext] def corpusSide(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+      .filter(VectorOps.norm(col("cv")) > 0)
+
+  private[ext] def querySide(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .filter(VectorOps.norm(col("qv")) > 0)
+
   /** Exact top-k neighbors of each query vector, excluding self.
     * Ordering ties broken by rounded cosine then neighbor id — fully
     * deterministic.
@@ -60,18 +78,9 @@ object Similarity {
       vecCol: String,
       k: Int
   ): DataFrame = {
-    // zero-norm rows are excluded on both sides — the ANN family
-    // contract (matches lshTopK; a zero vector has no direction, and
-    // under ANSI its cosine is a runtime divide-by-zero)
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(VectorOps.norm(col("qv")) > 0))
-    // broadcast-join parallelism follows the stream side's partition
-    // count; a small parquet corpus arrives as one split — spread it
-    val c = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .filter(VectorOps.norm(col("cv")) > 0)
     rankedTopK(
-      c.join(q, col("query_id") =!= col("neighbor_id"))
+      corpusSide(corpus, idCol, vecCol)
+        .join(broadcast(querySide(queries, idCol, vecCol)), col("query_id") =!= col("neighbor_id"))
         .withColumn("cos", round(VectorOps.cosine(col("qv"), col("cv")), 4)),
       "cos", scoreDesc = true, k)
   }
@@ -96,14 +105,9 @@ object Similarity {
       k: Int,
       tauPos: Double
   ): DataFrame = {
-    // zero-norm exclusion: same ANN-family contract as bruteTopK
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(VectorOps.norm(col("qv")) > 0))
-    val c = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .filter(VectorOps.norm(col("cv")) > 0)
     rankedTopK(
-      c.join(q, col("query_id") =!= col("neighbor_id"))
+      corpusSide(corpus, idCol, vecCol)
+        .join(broadcast(querySide(queries, idCol, vecCol)), col("query_id") =!= col("neighbor_id"))
         .withColumn("cos", round(VectorOps.cosine(col("qv"), col("cv")), 4))
         .filter(col("cos") < tauPos),
       "cos", scoreDesc = true, k)
@@ -195,37 +199,15 @@ object Similarity {
       if (adaptive) hyperplanesPrefix(tabs, b, dim, seed)
       else hyperplanes(tabs, b, dim, seed)
 
-    // Zero-norm vectors are excluded on BOTH sides, matching the
-    // oracle's shared sigs CTE filter: a zero-norm corpus vector
-    // colliding with a query scores cos = 0/0 = NaN, and NaN sorts
-    // LARGEST under descending order — it would rank first in top-k
-    // while contributing no similarity signal at all.
-    val c = BucketCap.dropHot(withBuckets(
-      corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-        .filter(VectorOps.norm(col("cv")) > 0), "neighbor_id", "cv", planes),
+    // zero-norm exclusion on both sides matches the oracle's shared
+    // sigs CTE filter
+    val c = BucketCap.dropHot(
+      withBuckets(corpusSide(corpus, idCol, vecCol), "neighbor_id", "cv", planes),
       Seq("t", "b"), maxBucket)
-    val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(VectorOps.norm(col("qv")) > 0)
-    // shape derivation sees BOTH sizes: the flat deep default is a
-    // RETRIEVAL-batch assumption (probe rows multiply only the query
-    // side), and with queries ≈ corpus — the knn-graph / bitext case —
-    // it built ~10⁹ probe rows at 100 k/side and died
-    // (recordings/bitext_r18.jsonl). The decision needs only "more
-    // than maxFlatQ queries or not", so a LIMITed count bounds its
-    // cost; pass queriesCount to skip the probe job.
+    val qBase = querySide(queries, idCol, vecCol)
     val (budget, depth) =
-      if (probeBudget > 0 || probeDepth > 0)
-        (if (probeBudget > 0) probeBudget else TopKProbeBudget,
-         if (probeDepth > 0) probeDepth else TopKProbeDepth)
-      else if (!adaptive) (TopKProbeBudget, TopKProbeDepth) // unused: no probing
-      else {
-        val keysFlat = probeKeysPerTable(b, TopKProbeBudget, TopKProbeDepth)
-        val maxFlatQ = FlatProbeCorpusFactor * nn / math.max(1L, keysFlat)
-        val qShape = if (queriesCount >= 0L) queriesCount
-                     else qBase.limit(math.min(maxFlatQ + 1L, Int.MaxValue.toLong).toInt).count()
-        lshAutoShape(b, qShape, nn)
-      }
+      if (!adaptive) (TopKProbeBudget, TopKProbeDepth) // unused: no probing
+      else lshProbeShape(b, nn, qBase, queriesCount, probeBudget, probeDepth)
     def probeKeys(withQv: Boolean) = {
       val cols0 = if (withQv) Seq(col("query_id"), col("qv")) else Seq(col("query_id"))
       if (adaptive)
@@ -249,11 +231,7 @@ object Similarity {
     // it).
     val keys = if (adaptive) probeKeysPerTable(b, budget, depth) else 1L
     val maxQ = probeBroadcastMax / math.max(1L, tabs * keys * (40L + 4L * dim))
-    // deciding needs only "more than maxQ queries or not" — a LIMITed
-    // count bounds the decision cost even on a huge query set (no
-    // hidden full-scan count; pass queriesCount to skip the probe job)
-    val qn = if (queriesCount >= 0L) queriesCount
-             else qBase.limit(math.min(maxQ + 1L, Int.MaxValue.toLong).toInt).count()
+    val qn = boundedCount(qBase, maxQ, queriesCount)
 
     // Cosine is computed MAP-SIDE, before the cross-table dedup — the
     // distinct then shuffles (query_id, neighbor_id, cos) rows (~50 B)
@@ -280,15 +258,11 @@ object Similarity {
           .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
           .filter(VectorOps.norm(col("cv")) > 0)
         // the rehydrate broadcast has its OWN (much larger) bound than
-        // the probe-fold's, so it needs its OWN LIMITed decision count:
-        // qn above is truncated at maxQ+1 — reusing it here would pass
-        // the test for ANY query set size and broadcast unconditionally
-        // (r18 review catch)
+        // the probe-fold's, so it needs its OWN decision count
+        // ([[boundedCount]]; r18 review catch)
         val maxQv = probeBroadcastMax / (40L + 4L * dim)
-        val qvn = if (queriesCount >= 0L) queriesCount
-                  else qBase.limit(math.min(maxQv + 1L, Int.MaxValue.toLong).toInt).count()
         val qvecs =
-          if (qvn <= maxQv) broadcast(qBase)
+          if (boundedCount(qBase, maxQv, queriesCount) <= maxQv) broadcast(qBase)
           else qBase.hint("shuffle_hash")
         cand.join(cvecs.hint("shuffle_hash"), Seq("neighbor_id"))
           .join(qvecs, Seq("query_id"))
@@ -372,6 +346,39 @@ object Similarity {
     else (Dedup.multiprobeBudget(bits), Dedup.multiprobeDepth(bits))
   }
 
+  /** The query-directed (budget, depth) of an adaptive LSH probe —
+    * shared by [[lshTopK]] and [[AnnIndex.lshTopKIndexed]] so the two
+    * paths cannot pick different shapes. Explicit `probeBudget` /
+    * `probeDepth` win; otherwise the shape sees BOTH sizes
+    * ([[lshAutoShape]]): the flat deep default is a RETRIEVAL-batch
+    * assumption, and with queries ≈ corpus — the knn-graph / bitext
+    * case — it built ~10⁹ probe rows at 100 k/side and died
+    * (recordings/bitext_r18.jsonl). `n` is the RAW corpus count
+    * (zero-norm rows included) on both paths.
+    */
+  private[ext] def lshProbeShape(bits: Int, n: Long, qBase: DataFrame,
+      queriesCount: Long, probeBudget: Int, probeDepth: Int): (Int, Int) =
+    if (probeBudget > 0 || probeDepth > 0)
+      (if (probeBudget > 0) probeBudget else TopKProbeBudget,
+       if (probeDepth > 0) probeDepth else TopKProbeDepth)
+    else {
+      val keysFlat = probeKeysPerTable(bits, TopKProbeBudget, TopKProbeDepth)
+      val maxFlatQ = FlatProbeCorpusFactor * n / math.max(1L, keysFlat)
+      lshAutoShape(bits, boundedCount(qBase, maxFlatQ, queriesCount), n)
+    }
+
+  /** Row count of `df` truncated at `max + 1` — every ANN tier switch
+    * needs only "more than `max` rows or not", so a LIMITed count
+    * bounds the decision cost even on a huge query set (no hidden
+    * full-scan count). A caller that knows the size passes it as
+    * `known >= 0` and skips the job. Each bound needs its OWN count: a
+    * count truncated at one bound passes the test of any larger one
+    * for every set size.
+    */
+  private[ext] def boundedCount(df: DataFrame, max: Long, known: Long): Long =
+    if (known >= 0L) known
+    else df.limit(math.min(max + 1L, Int.MaxValue.toLong).toInt).count()
+
   /** IVF list count derived from the corpus: the smallest POWER OF TWO
     * `L` with L² >= n (the classic nlist ≈ √n rule snapped to a power
     * of two so the oracle derives the same L with integer shifts),
@@ -391,7 +398,8 @@ object Similarity {
     * the lists, never fewer than 3 — the scan fraction stays ~1/8 as
     * the corpus grows (vs the fixed 3-of-20 = 15 % whose absolute scan
     * volume exploded linearly), and recall is measured, not assumed
-    * (AnnRecallProbe; floors in SimilaritySpec). This is a COST-shaped
+    * (recordings/ann_recall_r16/17/19.jsonl; floors in
+    * DedupSimilaritySpec). This is a COST-shaped
     * default; when a recall target matters, calibrate with
     * [[ivfProbesForRecall]] instead — the fixed fraction's measured
     * ceiling (65.6 % at 200 k, 78.4 % at 1 M on the i.i.d. fixture)
@@ -463,29 +471,19 @@ object Similarity {
   ): (Int, Int) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val lists =
-      if (numCentroids > 0) numCentroids
-      else trainedCentroids.map(_.size)
-        .getOrElse(adaptiveIvfLists(Dedup.corpusCount(corpus, n, "ivfProbesForRecall")))
-    val p0 = adaptiveIvfProbes(lists)
+    val (lists, p0, cents) = ivfGeometry(corpus, idCol, vecCol, numCentroids, 0,
+      trainedCentroids, Dedup.corpusCount(corpus, n, "ivfProbesForRecall"))
     val cap = math.max(p0, (lists * maxProbeFraction).toInt)
     val sq = if (sampleQueries > 0) sampleQueries
              else calibrationSampleSize(recallTargetBp, k)
-    val cents = trainedCentroids.getOrElse(
-      seedCentroids(corpus, idCol, vecCol, lists)).toArray
-    val centroids = broadcast(cents.toSeq.toDF("list", "centv"))
+    val centroids = broadcast(cents.toDF("list", "centv"))
     val sample = recallSampleQueries(corpus, idCol, vecCol, sq)
     val truth = bruteTopK(corpus, sample, idCol, vecCol, k)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.get(0), r.get(1))).toSet
     // assignment once, reused across every rung (the in-flight
     // operator would re-assign the corpus per call)
-    val assigned = corpus
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .filter(VectorOps.norm(col("cv")) > 0)
-      .withColumn("list",
-        graft.functions.AnnExprs.nearestCentroid(col("cv"), cents.map(_._1), cents.map(_._2)))
+    val assigned = ivfAssigned(corpus, idCol, vecCol, cents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // every query's FULL centroid ranking once — a rung is then a
     // row-local r <= p cut (sample × lists rows, broadcast-sized)
@@ -636,14 +634,12 @@ object Similarity {
     * post-fix rows). Normalization is IEEE-exact division, replayed
     * bit-identically by the oracle.
     *
-    * Codebooks are hash-seeded for oracle replayability (the `ks`
-    * corpus vectors whose md5 key hash sorts first, codeword id =
-    * 1-based position in that order; production would k-means each
-    * subspace — [[kmeansCentroids]] shows the deterministic recipe).
-    * Encoding is `m` row-local argmin expressions (one codegen pass,
-    * no shuffle); the scan streams the corpus against the broadcast
-    * query tables and the only shuffle is the per-query rank, exactly
-    * [[bruteTopK]]'s shape but over codes.
+    * Codebooks come from [[pqCodebooks]] (trained by default,
+    * hash-seeded with `trainBooks = false`, or injected). Encoding is
+    * `m` row-local argmin expressions ([[pqEncoded]], one codegen
+    * pass, no shuffle); the scan streams the corpus against the
+    * broadcast query tables ([[adcTopK]]) and the only shuffle is the
+    * per-query rank, exactly [[bruteTopK]]'s shape but over codes.
     */
   def pqTopK(
       corpus0: DataFrame,
@@ -679,58 +675,12 @@ object Similarity {
   ): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val sub = dim / m
-    val rr = if (rerank < 0) defaultRerank(k) else rerank
     val corpus = normalizedSide(corpus0, idCol, vecCol)
     val queries = normalizedSide(queries0, idCol, vecCol)
-    val codebooks: Array[Array[Array[Double]]] = trainedCodebooks.getOrElse {
-      if (trainBooks)
-        pqTrainCodebooks(corpus0, idCol, vecCol, m = m, ks = ks, dim = dim)
-      else {
-        val keyHash = expr(
-          s"cast(conv(substr(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)")
-        val seeds: Array[Array[Double]] = corpus
-          .select(col(vecCol).cast("array<double>").as("v"), keyHash.as("h"),
-            col(idCol).cast("long").as("id"))
-          .orderBy(col("h"), col("id")).limit(ks)
-          .collect().map(_.getSeq[Double](0).toArray)
-        Array.tabulate(m)(mi => seeds.map(s => s.slice(mi * sub, (mi + 1) * sub)))
-      }
-    }
-    // effective ks: a corpus smaller than ks yields fewer seed rows,
-    // and the code-id table must match the codebook it indexes
-    val codeIds = Array.tabulate(codebooks.headOption.map(_.length).getOrElse(0))(_ + 1L)
-
-    val vd = col(vecCol).cast("array<double>")
-    val encoded = corpus
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id") +: (0 until m).map(mi =>
-        graft.functions.AnnExprs.nearestCentroid(
-          slice(vd, mi * sub + 1, sub), codeIds, codebooks(mi)).as(s"code_$mi")): _*)
-
-    // Query-side distance tables via higher-order functions over the
-    // codebook as a literal: HOFs evaluate interpreted, which is the
-    // RIGHT trade here — the query set is tiny (rows, not corpus), and
-    // the literal-unrolled spelling was a 1024-term expression tree
-    // that cost ~5 s of Janino compile per run (measured; the whole
-    // query is ~0.5 s without it). Fold order (zip_with + sequential
-    // aggregate) is bit-identical to the oracle's generate_series fold.
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id") +: (0 until m).map(mi =>
-        slice(vd, mi * sub + 1, sub).as(s"sub_$mi")): _*)
-      .select(col("query_id") +: (0 until m).map { mi =>
-        // compiled table build (VecExprs.pqDistTable): identical fold
-        // order to the former transform+aggregate HOF, evaluated in
-        // one codegen loop instead of ks x dim interpreted lambdas
-        graft.functions.VecExprs.pqDistTable(col(s"sub_$mi"), codebooks(mi)).as(s"dt_$mi")
-      }: _*))
-
-    val adist = (0 until m).map(mi =>
-      element_at(col(s"dt_$mi"), col(s"code_$mi").cast("int"))).reduce(_ + _)
-    val adc = rankedTopK(
-      encoded.join(q, col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist", round(adist, 4)),
-      "adist", scoreDesc = false, if (rr > 0) rr * k else k)
-    if (rr <= 0) adc else rerankShortlist(adc, corpus, queries, idCol, vecCol, k)
+    val codebooks = pqCodebooks(corpus0, idCol, vecCol, m, ks, dim, trainedCodebooks, trainBooks)
+    val encoded = pqEncoded(corpus, idCol, vecCol, sub, codebooks)
+    adcTopK(queries, idCol, vecCol, sub, codebooks, k, rerank, corpus)(dt =>
+      encoded.join(broadcast(dt), col("query_id") =!= col("neighbor_id")))
   }
 
   /** The derived rerank multiplier when a PQ-family caller does not
@@ -789,26 +739,14 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val sub = dim / m
     val corpus = normalizedSide(corpus0, idCol, vecCol)
-    val keyHash = expr(
-      s"cast(conv(substr(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)")
-    val seeds: Array[Array[Double]] = corpus
-      .select(col(vecCol).cast("array<double>").as("v"), keyHash.as("h"),
-        col(idCol).cast("long").as("id"))
-      .orderBy(col("h"), col("id")).limit(ks)
-      .collect().map(_.getSeq[Double](0).toArray)
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(mi => seeds.map(s => s.slice(mi * sub, (mi + 1) * sub)))
+    var books = pqSeedBooks(corpus, idCol, vecCol, m, ks, sub)
     val vd = col(vecCol).cast("array<double>")
     for (_ <- 1 to iters) {
-      val codeIds = Array.tabulate(books.headOption.map(_.length).getOrElse(0))(_ + 1L)
-      val codesArr = array((0 until m).map(mi =>
-        graft.functions.AnnExprs.nearestCentroid(
-          slice(vd, mi * sub + 1, sub), codeIds, books(mi))): _*)
       // project the m argmins BEFORE the posexplode so each row's
       // assignment is computed once and carried, not re-derived per
       // exploded component
       val agg = corpus
-        .select(codesArr.as("codes"), vd.as("v"))
+        .select(array(pqCodes(vd, sub, books): _*).as("codes"), vd.as("v"))
         .select(col("codes"), posexplode(col("v")).as(Seq("pos", "x")))
         .select((col("pos") / sub).cast("int").as("mi"),
           element_at(col("codes"), (col("pos") / sub).cast("int") + 1).as("code"),
@@ -915,7 +853,6 @@ object Similarity {
   ): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val sub = dim / m
-    val rr = if (rerank < 0) defaultRerank(k) else rerank
     // the whole tier runs on L2-NORMALIZED vectors (coarse quantizer,
     // codebooks, ADC tables alike — see pqTopK: L2 on unit vectors is
     // monotone in cosine, which is what the family's recall contract
@@ -924,73 +861,23 @@ object Similarity {
     val queries = normalizedSide(queries0, idCol, vecCol)
     val spark = corpus.sparkSession
     import spark.implicits._
-    // numCentroids <= 0 ⇒ corpus-adaptive list/probe shape, identical
-    // derivation to [[ivfTopK]] (r16): L = smallest power of two with
-    // L² >= n, P = max(3, L/8) — constant ~1/8 scan fraction. The PQ
-    // codebook size `ks` stays fixed: code granularity is a
-    // compression-accuracy trade, not an occupancy one.
-    // adaptive shape derives from the PRE-filter frame (corpus0): the
+    // corpus-adaptive list/probe shape, identical derivation to
+    // [[ivfTopK]]. The PQ codebook size `ks` stays fixed: code
+    // granularity is a compression-accuracy trade, not an occupancy
+    // one. The shape derives from the PRE-filter frame (corpus0): the
     // DuckDB oracle's count(*) counts all rows, so a corpus whose
     // zero-norm-filtered count straddles a power-of-two boundary must
     // not get a different list count than the oracle (r18 advice)
-    val lists =
-      if (numCentroids > 0) numCentroids
-      else trainedCentroids.map(_.size).getOrElse(
-        adaptiveIvfLists(Dedup.corpusCount(corpus0, n, "ivfPqTopK")))
-    val probeCount = if (nProbe > 0) nProbe else adaptiveIvfProbes(lists)
-    val cents = trainedCentroids.getOrElse(
-      seedCentroids(corpus, idCol, vecCol, lists)).toArray
-    val keyHash = expr(
-      s"cast(conv(substr(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)")
-    def hashSeeds(): Array[Array[Double]] = corpus
-      .select(col(vecCol).cast("array<double>").as("v"), keyHash.as("h"),
-        col(idCol).cast("long").as("id"))
-      .orderBy(col("h"), col("id")).limit(ks)
-      .collect().map(_.getSeq[Double](0).toArray)
-    val codebooks: Array[Array[Array[Double]]] = trainedCodebooks.getOrElse {
-      if (trainBooks)
-        pqTrainCodebooks(corpus0, idCol, vecCol, m = m, ks = ks, dim = dim)
-      else {
-        val seeds = hashSeeds()
-        Array.tabulate(m)(mi => seeds.map(s => s.slice(mi * sub, (mi + 1) * sub)))
-      }
-    }
-    // effective ks from the codebook actually built (a corpus smaller
-    // than ks yields fewer codewords; injected books set their own)
-    val codeIds = Array.tabulate(codebooks.headOption.map(_.length).getOrElse(ks))(_ + 1L)
-
-    val vd = col(vecCol).cast("array<double>")
+    val (_, probeCount, cents) = ivfGeometry(corpus, idCol, vecCol, numCentroids, nProbe,
+      trainedCentroids, Dedup.corpusCount(corpus0, n, "ivfPqTopK"))
+    val codebooks = pqCodebooks(corpus0, idCol, vecCol, m, ks, dim, trainedCodebooks, trainBooks)
     // one corpus pass: list + m codes, all row-local argmins
-    val encoded = corpus
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), vd.as("v"))
-      .select(col("neighbor_id") +:
-        graft.functions.AnnExprs.nearestCentroid(col("v"), cents.map(_._1), cents.map(_._2)).as("list") +:
-        (0 until m).map(mi =>
-          graft.functions.AnnExprs.nearestCentroid(
-            slice(col("v"), mi * sub + 1, sub), codeIds, codebooks(mi)).as(s"code_$mi")): _*)
-
-    val centroids = broadcast(cents.toSeq.toDF("list", "centv"))
-    val probes = pqQueryProbes(queries, idCol, vecCol, centroids, probeCount)
-
-    val dtables = queries
-      .select(col(idCol).as("query_id") +: (0 until m).map(mi =>
-        slice(vd, mi * sub + 1, sub).as(s"sub_$mi")): _*)
-      .select(col("query_id") +: (0 until m).map { mi =>
-        // compiled table build (VecExprs.pqDistTable): identical fold
-        // order to the former transform+aggregate HOF, evaluated in
-        // one codegen loop instead of ks x dim interpreted lambdas
-        graft.functions.VecExprs.pqDistTable(col(s"sub_$mi"), codebooks(mi)).as(s"dt_$mi")
-      }: _*)
-
-    val adist = (0 until m).map(mi =>
-      element_at(col(s"dt_$mi"), col(s"code_$mi").cast("int"))).reduce(_ + _)
-    val adc = rankedTopK(
-      encoded.join(broadcast(probes.join(dtables, Seq("query_id"))), Seq("list"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist", round(adist, 4)),
-      "adist", scoreDesc = false, if (rr > 0) rr * k else k)
-    if (rr <= 0) adc else rerankShortlist(adc, corpus, queries, idCol, vecCol, k)
+    val encoded = pqEncoded(corpus, idCol, vecCol, sub, codebooks, Some(cents))
+    val probes = pqQueryProbes(queries, idCol, vecCol,
+      broadcast(cents.toDF("list", "centv")), probeCount)
+    adcTopK(queries, idCol, vecCol, sub, codebooks, k, rerank, corpus)(dt =>
+      encoded.join(broadcast(probes.join(dt, Seq("query_id"))), Seq("list"))
+        .filter(col("query_id") =!= col("neighbor_id")))
   }
 
   /** Per-label embedding statistics: class counts and the mean vector,
@@ -1114,11 +1001,7 @@ object Similarity {
       centroids: DataFrame,
       probeCount: Int): DataFrame = {
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("d").asc, col("list").asc)
-    // zero-norm queries are excluded here (the ANN family contract),
-    // so BOTH callers inherit it and a zero query yields no rows
-    // instead of an ANSI divide-by-zero at the cosine
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(VectorOps.norm(col("qv")) > 0)
+    querySide(queries, idCol, vecCol)
       .join(centroids, col("query_id") =!= lit(-1))
       .withColumn("d", VectorOps.l2sq(col("qv"), col("centv")))
       .withColumn("r", row_number().over(wProbe))
@@ -1165,44 +1048,223 @@ object Similarity {
       .select("query_id", "list")
   }
 
-  /** The hash-picked seeds shared by [[ivfTopK]] and [[kmeansCentroids]]:
-    * a TakeOrdered over the portable md5 key hash (per-partition top-K +
-    * K-row driver merge — O(K×dim) on the driver at any corpus size).
+  /** The first `limit` corpus rows in portable md5 key-hash order (hash
+    * order = a reproducible uniform shuffle, same family as
+    * [[Pipeline.hashSample]], so any engine can replay the pick; ties
+    * by id), as (id, vector as doubles) in that order. A TakeOrdered —
+    * per-partition top-K + K-row driver merge — so the driver holds
+    * O(K×dim) at any corpus size. Every hash-seeded ANN geometry (IVF
+    * centroids, PQ codebooks, the k-means and codebook-training seeds)
+    * is this pick.
+    */
+  private def hashSeeds(corpus: DataFrame, idCol: String, vecCol: String,
+      limit: Int): Array[(Long, Array[Double])] = {
+    val keyHash = expr(
+      s"cast(conv(substr(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)")
+    corpus
+      .select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("v"), keyHash.as("h"))
+      .orderBy(col("h"), col("id"))
+      .limit(limit)
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+  }
+
+  /** The hash-picked IVF seeds ([[hashSeeds]]) in list-id order, shared
+    * by [[ivfTopK]], [[ivfPqTopK]], [[kmeansCentroids]] and the IVF
+    * indexes.
     */
   private[ext] def seedCentroids(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       numCentroids: Int
-  ): Seq[(Long, Array[Double])] = {
-    val keyHash = expr(
-      s"cast(conv(substr(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)")
-    corpus
-      .select(col(idCol).cast("long").as("list"),
-        col(vecCol).cast("array<double>").as("centv"), keyHash.as("h"))
-      .orderBy(col("h"), col("list"))
-      .limit(numCentroids)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-      .toSeq
+  ): Seq[(Long, Array[Double])] =
+    hashSeeds(corpus, idCol, vecCol, numCentroids).sortBy(_._1).toSeq
+
+  /** The IVF geometry of a call: list count, probe count and centroids.
+    * `numCentroids <= 0` derives the list count from the corpus size
+    * `n` ([[adaptiveIvfLists]], by name — counted only when needed) or
+    * from the injected centroids, `nProbe <= 0` couples the probe count
+    * to it ([[adaptiveIvfProbes]]), and absent `trained` centroids the
+    * seeds are hash-picked from `seedSide`. Shared by the in-flight IVF
+    * tiers and the IVF indexes so a build and the operator it persists
+    * can never derive different shapes.
+    */
+  private[ext] def ivfGeometry(
+      seedSide: DataFrame,
+      idCol: String,
+      vecCol: String,
+      numCentroids: Int,
+      nProbe: Int,
+      trained: Option[Seq[(Long, Array[Double])]],
+      n: => Long
+  ): (Int, Int, Seq[(Long, Array[Double])]) = {
+    val lists =
+      if (numCentroids > 0) numCentroids
+      else trained.map(_.size).getOrElse(adaptiveIvfLists(n))
+    val probeCount = if (nProbe > 0) nProbe else adaptiveIvfProbes(lists)
+    (lists, probeCount, trained.getOrElse(seedCentroids(seedSide, idCol, vecCol, lists)))
+  }
+
+  /** Corpus-side IVF list assignment over [[corpusSide]] (seeding stays
+    * on the raw corpus — it is l2-only and needs no direction): each
+    * vector's nearest centroid via the row-local argmin expression
+    * (l2sq fold, smaller-id tie-break — no corpus×centroid join).
+    * Output (list, neighbor_id, cv). Shared by [[ivfTopK]],
+    * [[ivfProbesForRecall]] and the IVF index build/append.
+    */
+  private[ext] def ivfAssigned(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      cents: Seq[(Long, Array[Double])]
+  ): DataFrame =
+    corpusSide(corpus, idCol, vecCol)
+      .withColumn("list", graft.functions.AnnExprs.nearestCentroid(
+        col("cv"), cents.map(_._1).toArray, cents.map(_._2).toArray))
+      .select("list", "neighbor_id", "cv")
+
+  /** The IVF probe join and cosine, shared by [[ivfTopK]] and
+    * [[AnnIndex.ivfTopKIndexed]] — they differ only in where the
+    * assigned rows come from. `assigned` and `probes` meet on `key`;
+    * the probe frame (queries × nProbe rows, each carrying a
+    * `dim`-float qv) is broadcast while its estimated size stays under
+    * `probeBroadcastMax`, and joins unhinted beyond it (AQE picks
+    * shuffle-hash vs spillable sort-merge from actual sizes) — the same
+    * tier switch as [[lshTopK]], identical answers.
+    */
+  private[ext] def ivfProbeJoin(
+      assigned: DataFrame,
+      probes: DataFrame,
+      key: String,
+      queries: DataFrame,
+      probeCount: Int,
+      dim: Int,
+      queriesCount: Long,
+      probeBroadcastMax: Long
+  ): DataFrame = {
+    val maxQ = probeBroadcastMax / math.max(1L, probeCount.toLong * (40L + 4L * dim))
+    val probeSide =
+      if (boundedCount(queries, maxQ, queriesCount) <= maxQ) broadcast(probes) else probes
+    assigned.join(probeSide, Seq(key))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", round(VectorOps.cosine(col("qv"), col("cv")), 4))
+  }
+
+  /** The PQ codebooks of a call: `injected` books pin the geometry;
+    * otherwise per-subspace k-means ([[pqTrainCodebooks]]) when `train`,
+    * else the untrained hash-seeded stand-in ([[pqSeedBooks]] over the
+    * normalized corpus — oracle/parity cells). Shared by [[pqTopK]],
+    * [[ivfPqTopK]] and [[AnnIndex.ivfPqIndexWrite]].
+    */
+  private[ext] def pqCodebooks(
+      corpus0: DataFrame,
+      idCol: String,
+      vecCol: String,
+      m: Int,
+      ks: Int,
+      dim: Int,
+      injected: Option[Array[Array[Array[Double]]]],
+      train: Boolean
+  ): Array[Array[Array[Double]]] =
+    injected.getOrElse {
+      if (train) pqTrainCodebooks(corpus0, idCol, vecCol, m = m, ks = ks, dim = dim)
+      else pqSeedBooks(normalizedSide(corpus0, idCol, vecCol), idCol, vecCol, m, ks, dim / m)
+    }
+
+  /** Hash-seeded PQ books: the `ks` [[hashSeeds]] vectors split into
+    * `m` subspaces of `sub` components, codeword id = 1-based position
+    * in hash order. A corpus smaller than `ks` yields fewer codewords —
+    * every consumer sizes its code ids from the books actually built.
+    */
+  private def pqSeedBooks(corpus: DataFrame, idCol: String, vecCol: String,
+      m: Int, ks: Int, sub: Int): Array[Array[Array[Double]]] = {
+    val seeds = hashSeeds(corpus, idCol, vecCol, ks).map(_._2)
+    Array.tabulate(m)(mi => seeds.map(s => s.slice(mi * sub, (mi + 1) * sub)))
+  }
+
+  /** The `m` row-local subspace argmins of the double vector `v` — the
+    * PQ codes, codeword ids 1..ks of each book.
+    */
+  private def pqCodes(v: Column, sub: Int, books: Array[Array[Array[Double]]]): Seq[Column] = {
+    val codeIds = Array.tabulate(books.headOption.map(_.length).getOrElse(0))(_ + 1L)
+    books.indices.map(mi =>
+      graft.functions.AnnExprs.nearestCentroid(slice(v, mi * sub + 1, sub), codeIds, books(mi)))
+  }
+
+  /** PQ encoding of a [[normalizedSide]] frame in one row-local pass (no
+    * shuffle): `neighbor_id`, the IVF `list` when `cents` is given, and
+    * `code_0 … code_{m-1}`. Shared by [[pqTopK]], [[ivfPqTopK]] and the
+    * IVF-PQ index build/append, so the persisted codes can never
+    * disagree with the in-flight encoding.
+    */
+  private[ext] def pqEncoded(
+      side: DataFrame,
+      idCol: String,
+      vecCol: String,
+      sub: Int,
+      books: Array[Array[Array[Double]]],
+      cents: Option[Seq[(Long, Array[Double])]] = None
+  ): DataFrame = {
+    val list = cents.map(c => graft.functions.AnnExprs.nearestCentroid(
+      col("v"), c.map(_._1).toArray, c.map(_._2).toArray).as("list")).toSeq
+    val codes = pqCodes(col("v"), sub, books).zipWithIndex.map { case (c, mi) => c.as(s"code_$mi") }
+    side.repartition(side.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("v"))
+      .select(col("neighbor_id") +: (list ++ codes): _*)
+  }
+
+  /** Asymmetric-distance (ADC) top-k, shared by [[pqTopK]],
+    * [[ivfPqTopK]] and [[AnnIndex.ivfPqTopKIndexed]]: each query's `m`
+    * per-subspace distance tables to every codeword (`dt_i`), then
+    * `candidates(tables)` pairs them with encoded rows (`code_i`) and
+    * the per-pair distance is `m` table lookups — `adist`, rounded, in
+    * the oracle's m-ordered fold. The table build is compiled
+    * (VecExprs.pqDistTable): one codegen loop per subspace, in the
+    * oracle's fold order, instead of ks × dim interpreted lambdas.
+    * `rerank < 0` derives the exact-cosine refine
+    * ([[defaultRerank]]); when on, ADC ranks a rerank×k shortlist and
+    * [[rerankShortlist]] re-ranks it against `refineFrom` (by name:
+    * read only when the refine runs).
+    */
+  private[ext] def adcTopK(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      sub: Int,
+      books: Array[Array[Array[Double]]],
+      k: Int,
+      rerank: Int,
+      refineFrom: => DataFrame
+  )(candidates: DataFrame => DataFrame): DataFrame = {
+    val rr = if (rerank < 0) defaultRerank(k) else rerank
+    val m = books.length
+    val vd = col(vecCol).cast("array<double>")
+    val tables = queries
+      .select(col(idCol).as("query_id") +: (0 until m).map(mi =>
+        slice(vd, mi * sub + 1, sub).as(s"sub_$mi")): _*)
+      .select(col("query_id") +: (0 until m).map(mi =>
+        graft.functions.VecExprs.pqDistTable(col(s"sub_$mi"), books(mi)).as(s"dt_$mi")): _*)
+    val adist = (0 until m).map(mi =>
+      element_at(col(s"dt_$mi"), col(s"code_$mi").cast("int"))).reduce(_ + _)
+    val adc = rankedTopK(
+      candidates(tables)
+        .withColumn("adist", round(adist, 4))
+        .select("query_id", "neighbor_id", "adist"),
+      "adist", scoreDesc = false, if (rr > 0) rr * k else k)
+    if (rr <= 0) adc else rerankShortlist(adc, refineFrom, queries, idCol, vecCol, k)
   }
 
   /** IVF approximate top-k. Default centroids are the `numCentroids`
-    * corpus vectors whose portable md5 key hash sorts first (hash
-    * order = a reproducible uniform shuffle, same family as
-    * [[Pipeline.hashSample]], so any engine can replay the choice);
-    * pass `trainedCentroids` (e.g. from [[kmeansCentroids]]) to probe
-    * refined lists instead. Every corpus vector joins its nearest
-    * centroid's list; each query probes its `nProbe` nearest lists.
-    * At scale: write the corpus bucketed by `list` so probing reads
-    * only nProbe buckets.
-    *
-    * The centroid pick is a TakeOrdered over `(hash, id)` — per-
-    * partition top-K then a K-row driver merge — so the driver holds
-    * O(K x dim) regardless of corpus size. (The round-2 id-stride rule
-    * collected corpus/stride vectors: linear in the corpus, a driver
-    * OOM at 10^9 vectors.)
+    * corpus vectors whose portable md5 key hash sorts first
+    * ([[seedCentroids]] — a TakeOrdered, O(K x dim) on the driver at
+    * any corpus size); pass `trainedCentroids` (e.g. from
+    * [[kmeansCentroids]]) to probe refined lists instead. Every corpus
+    * vector joins its nearest centroid's list; each query probes its
+    * `nProbe` nearest lists. At scale: write the corpus bucketed by
+    * `list` so probing reads only nProbe buckets
+    * ([[AnnIndex.ivfIndexWrite]]).
     */
   def ivfTopK(
       corpus: DataFrame,
@@ -1218,51 +1280,19 @@ object Similarity {
       probeBroadcastMax: Long = ProbeBroadcastMaxBytes
   ): DataFrame = {
     // numCentroids <= 0 ⇒ derive the list count from the corpus size
-    // ([[adaptiveIvfLists]]) and the probe count from the list count
-    // ([[adaptiveIvfProbes]]) — the r16 default; explicit values pin a
-    // shape (the kmeans-trained query and the unit fixtures do).
-    val lists =
-      if (numCentroids > 0) numCentroids
-      else trainedCentroids.map(_.size)
-        .getOrElse(adaptiveIvfLists(Dedup.corpusCount(corpus, n, "ivfTopK")))
-    val probeCount = if (nProbe > 0) nProbe else adaptiveIvfProbes(lists)
-    val cents = trainedCentroids.getOrElse(
-      seedCentroids(corpus, idCol, vecCol, lists)).toArray
+    // and the probe count from the list count ([[ivfGeometry]]) — the
+    // r16 default; explicit values pin a shape (the kmeans-trained
+    // query and the unit fixtures do).
+    val (_, probeCount, cents) = ivfGeometry(corpus, idCol, vecCol, numCentroids, nProbe,
+      trainedCentroids, Dedup.corpusCount(corpus, n, "ivfTopK"))
     val spark = corpus.sparkSession
     import spark.implicits._
-    val centroids = broadcast(
-      cents.toSeq.toDF("list", "centv"))
-
-    // corpus side: nearest centroid per vector via the row-local
-    // argmin expression (same l2sq fold and smaller-id tie-break as
-    // the old rank-1 window, which shuffled the whole corpus)
-    val assigned = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      // zero-norm corpus rows never become candidates (ANN family
-      // contract; the centroid SEED pick above stays on the raw
-      // corpus — seeding is l2-only and needs no direction)
-      .filter(VectorOps.norm(col("cv")) > 0)
-      .withColumn("list",
-        graft.functions.AnnExprs.nearestCentroid(col("cv"), cents.map(_._1), cents.map(_._2)))
-      .select("list", "neighbor_id", "cv")
-
-    // query side: nProbe nearest lists; past the broadcast cap the
-    // probe frame (queries × nProbe rows, each carrying qv) joins
-    // shuffle-hash instead — same tier switch as lshTopK, identical
-    // pair output
-    val probes = ivfQueryProbes(queries, idCol, vecCol, centroids, probeCount)
-    val maxQ = probeBroadcastMax / math.max(1L, probeCount.toLong * 304L)
-    val qn = if (queriesCount >= 0L) queriesCount
-             else queries.limit(math.min(maxQ + 1L, Int.MaxValue.toLong).toInt).count()
-    val joined =
-      if (qn <= maxQ) assigned.join(broadcast(probes), Seq("list"))
-      // unhinted: AQE picks shuffle-hash vs spillable sort-merge
-      else assigned.join(probes, Seq("list"))
-
+    val probes = ivfQueryProbes(queries, idCol, vecCol,
+      broadcast(cents.toDF("list", "centv")), probeCount)
     rankedTopK(
-      joined
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("cos", round(VectorOps.cosine(col("qv"), col("cv")), 4)),
+      ivfProbeJoin(ivfAssigned(corpus, idCol, vecCol, cents), probes, "list", queries,
+        probeCount, cents.headOption.map(_._2.length).getOrElse(0), queriesCount,
+        probeBroadcastMax),
       "cos", scoreDesc = true, k)
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * hash-picked centroids), so the oracle replays the exact algorithm in
   * DuckDB —
   * hyperplane literals are generated from the same seeded values the
-  * Spark side uses. SimilaritySpec additionally bounds their recall
+  * Spark side uses. DedupSimilaritySpec additionally bounds their recall
   * against the brute baseline.
   */
 object SimilarityQueries extends QueryGroup {

@@ -150,30 +150,35 @@ class AnnIndexSpec extends SparkSuite {
       .sortBy(t => (t._1, t._2)).toSeq
 
   test("ivfPqTopKIndexed answers the in-flight adaptive ivfPqTopK exactly") {
-    val dir = tempDir("ann-ivfpq-index")
     val n = emb.count()
-    val meta = AnnIndex.ivfPqIndexWrite(emb, "vec_id", "embedding", dir, n = n)
-    assert(AnnIndex.ivfPqMeta(spark, dir) == meta)
-    assert(meta.lists == Similarity.adaptiveIvfLists(n) &&
-      meta.nProbe == Similarity.adaptiveIvfProbes(meta.lists) &&
-      meta.m == 8 && meta.ks == 256 && meta.rows == 300L)  // zero-norm row excluded; ks = r20 default
-    val direct = collectTopKBy(
-      Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding", K, n = n,
-        rerank = 0), "adist")
-    val indexed = collectTopKBy(
-      AnnIndex.ivfPqTopKIndexed(spark, dir, queries, "vec_id", "embedding", K,
-        rerank = 0), "adist")
-    assert(indexed.nonEmpty && indexed == direct)
-    // the probed-list union reaches the compressed scan as a partition
-    // filter, like the raw-IVF index
-    val one = AnnIndex.ivfPqTopKIndexed(spark, dir, emb.filter(col("vec_id") === 0),
-      "vec_id", "embedding", K, rerank = 0)
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("listp"), plan.take(1200))
-    // codes/ carries only the id + m codes — never the raw vectors
-    val codeCols = spark.read.parquet(s"$dir/codes/batch=c00001").columns.toSet
-    assert(codeCols == (Set("neighbor_id", "listp") ++ (0 until 8).map(i => s"code_$i")),
-      codeCols.mkString(","))
+    // trained books (the default) and the hash-seeded stand-in
+    // (trainBooks = false) — both codebook paths pinned on both sides
+    for (trainBooks <- Seq(true, false)) {
+      val dir = tempDir(s"ann-ivfpq-index-$trainBooks")
+      val meta = AnnIndex.ivfPqIndexWrite(emb, "vec_id", "embedding", dir, n = n,
+        trainBooks = trainBooks)
+      assert(AnnIndex.ivfPqMeta(spark, dir) == meta)
+      assert(meta.lists == Similarity.adaptiveIvfLists(n) &&
+        meta.nProbe == Similarity.adaptiveIvfProbes(meta.lists) &&
+        meta.m == 8 && meta.ks == 256 && meta.rows == 300L)  // zero-norm row excluded; ks = r20 default
+      val direct = collectTopKBy(
+        Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding", K, n = n,
+          rerank = 0, trainBooks = trainBooks), "adist")
+      val indexed = collectTopKBy(
+        AnnIndex.ivfPqTopKIndexed(spark, dir, queries, "vec_id", "embedding", K,
+          rerank = 0), "adist")
+      assert(indexed.nonEmpty && indexed == direct, s"trainBooks = $trainBooks")
+      // the probed-list union reaches the compressed scan as a partition
+      // filter, like the raw-IVF index
+      val one = AnnIndex.ivfPqTopKIndexed(spark, dir, emb.filter(col("vec_id") === 0),
+        "vec_id", "embedding", K, rerank = 0)
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("listp"), plan.take(1200))
+      // codes/ carries only the id + m codes — never the raw vectors
+      val codeCols = spark.read.parquet(s"$dir/codes/batch=c00001").columns.toSet
+      assert(codeCols == (Set("neighbor_id", "listp") ++ (0 until 8).map(i => s"code_$i")),
+        codeCols.mkString(","))
+    }
   }
 
   test("ivfPq rerank: indexed refine answers the in-flight refine exactly; cos contract") {
@@ -280,6 +285,25 @@ class AnnIndexSpec extends SparkSuite {
       probeBroadcastMax = 1L)
     assert(collectTopK(ivfIdxF) == collectTopK(ivfIdxD))
     assert(bhj(ivfIdxF) < bhj(ivfIdxD) && nonBroadcastJoin(ivfIdxF))
+
+    // the in-flight IVF cap sizes probe rows from the centroid dim
+    // (40 + 4·dim bytes, like the indexed probe): at 512 dims a cap
+    // between a dim-64-sized row (304 B) and the real 2 088 B row
+    // must already leave the broadcast tier
+    import spark.implicits._
+    val rnd = new scala.util.Random(13L)
+    val wide = (0 until 300).map(i => (i.toLong, Array.fill(512)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").coalesce(2)
+    val wideQ = wide.filter(col("vec_id") < 8)
+    val probes = Similarity.adaptiveIvfProbes(Similarity.adaptiveIvfLists(300L))
+    val between = 8L * probes * 1000L
+    assert(between / (probes * 304L) >= 8L && between / (probes * (40L + 4L * 512)) < 8L)
+    val wideD = Similarity.ivfTopK(wide, wideQ, "vec_id", "embedding", K, n = 300L)
+    val wideF = Similarity.ivfTopK(wide, wideQ, "vec_id", "embedding", K, n = 300L,
+      probeBroadcastMax = between)
+    assert(collectTopK(wideF) == collectTopK(wideD))
+    assert(bhj(wideF) < bhj(wideD) && nonBroadcastJoin(wideF),
+      wideF.queryExecution.executedPlan.toString.take(1200))
     }
   }
 
